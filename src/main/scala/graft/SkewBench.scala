@@ -1,7 +1,6 @@
 package graft
 
-import graft.extract.ExtractOptions
-import graft.spark.{ExtractJob, TranscriptGen, Turn}
+import graft.spark.{ExtractJob, GraftOps, TranscriptGen}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -76,19 +75,12 @@ object SkewBench {
       spark.sparkContext.addSparkListener(lst)
       val turns = TranscriptGen.skewedTurns(spark, sfDir, tpd)
       val t = System.nanoTime()
-      val count =
-        if (salted)
-          ExtractJob.run(spark, turns, buckets).extracted
-            .filter(_.extracted_text != null).count()
-        else {
-          import spark.implicits._
-          val opts = ExtractOptions()
-          turns.toDF()
-            .withColumn("b", pmod(hash(col("conv_id")), lit(buckets)))
-            .repartition(buckets, col("b")).drop("b").as[Turn]
-            .mapPartitions(it => it.map(x => ExtractJob.extractTurn(x, opts)))
-            .filter(_.extracted_text != null).count()
-        }
+      val extracted =
+        if (salted) ExtractJob.run(spark, turns, buckets).extracted.toDF()
+        else GraftOps.extractTurns(turns.toDF()
+          .withColumn("b", pmod(hash(col("conv_id")), lit(buckets)))
+          .repartition(buckets, col("b")))
+      val count = extracted.where(col("extracted_text").isNotNull).count()
       val sec = (System.nanoTime() - t) / 1e9
       Thread.sleep(600) // let the listener bus drain
       val ratio = lst.ratios(cores)

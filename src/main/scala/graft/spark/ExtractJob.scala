@@ -5,17 +5,18 @@ import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 
-import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** The Spark-native extraction pipeline (SURVEY.md §3 "Spark lifecycle
   * equivalent"):
   *
-  *   scan (column-pruned to conv_id/turn_idx/text) →
+  *   scan (column-pruned to conv_id/turn_idx/text: role/tool/ts are
+  *   never scanned, shuffled or decoded) →
   *   explicit bucketing on hash(conv_id) with turn-level salting for
   *   skewed long conversations →
-  *   one `mapPartitions` hot path (batched per-partition DOM tokenize +
-  *   node-classify: the whole readability pipeline, node-local, zero
-  *   shuffle after the bucketing exchange) →
+  *   the one extraction operator, [[ExtractTurnsNode]] (batched
+  *   per-partition DOM tokenize + node-classify: the whole readability
+  *   pipeline, node-local, zero shuffle after the bucketing exchange) →
   *   extracted turns + per-partition lineage rows.
   *
   * Scale notes (10^12 turns, 1000 executors):
@@ -26,25 +27,34 @@ import scala.collection.mutable
   *  - per-row memory is bounded by one DOM (~8× payload size); pathological
   *    payloads fail soft into `failed=true` rows like the reference's
   *    Unparseable (readability.py:670-676), never killing the task;
-  *  - lineage rows (1 per bucket) ride a CollectionAccumulator —
-  *    deduplicated by bucket on read, so task retries cannot double-count.
+  *  - lineage rows ride a CollectionAccumulator keyed by stage, partition
+  *    and attempt, and are summed by bucket on read, so buckets that span
+  *    partitions, task retries and repeated actions all count exactly.
   */
 object ExtractJob {
-
-  val HistogramBins = 12 // confidence bins: [0,10), [10,20), …, [110,∞)
 
   /** Extraction result: the distributed dataset plus (after an action)
     * the per-bucket lineage rows. */
   final class Result(
       val extracted: Dataset[ExtractedTurn],
-      acc: CollectionAccumulator[LineageRow]) {
-    /** Per-bucket lineage, valid once an action has run; deduped by
-      * bucket id (task retries may report twice). */
+      acc: CollectionAccumulator[PartitionLineage]) {
+    /** Per-bucket lineage, valid once an action has run over every
+      * partition. Each action adds a set per partition under a new stage
+      * id, and a retried task may add a second one: keep the stage that
+      * covered most partitions, one attempt each, then sum by bucket. */
     def lineageRows: Seq[LineageRow] = {
-      val seen = mutable.Set.empty[Int]
-      val out = Seq.newBuilder[LineageRow]
-      acc.value.forEach { r => if (seen.add(r.bucket)) out += r }
-      out.result()
+      val sets = acc.value.asScala.toSeq
+      if (sets.isEmpty) Seq.empty
+      else sets.groupBy(_.stage).values
+        .maxBy(ss => (ss.map(_.partition).distinct.size, -ss.head.stage))
+        .groupBy(_.partition).values.toSeq.flatMap(_.minBy(_.attempt).rows)
+        .groupBy(_.bucket).values.toSeq.map(_.reduce((a, b) => a.copy(
+          extracted_turns = a.extracted_turns + b.extracted_turns,
+          failed_turns = a.failed_turns + b.failed_turns,
+          empty_turns = a.empty_turns + b.empty_turns,
+          score_histogram = a.score_histogram.zip(b.score_histogram).map(p => p._1 + p._2),
+          wall_ms = a.wall_ms + b.wall_ms)))
+        .sortBy(_.bucket)
     }
   }
 
@@ -52,6 +62,8 @@ object ExtractJob {
     * over at most `salt` buckets, each still sorted by turn_idx within. */
   def saltFor(numBuckets: Int): Int = math.max(1, numBuckets / 8)
 
+  /** The typed per-row face: streaming, per-row queries, and the
+    * reference the operator is tested against. */
   def extractTurn(t: Turn, opts: ExtractOptions): ExtractedTurn = {
     val s = Extractor.extract(t.text, opts)
     ExtractedTurn(t.conv_id, t.turn_idx, s.confidence,
@@ -66,23 +78,11 @@ object ExtractJob {
     pmod(hash(col("conv_id"), pmod(col("turn_idx"), lit(salt))), lit(numBuckets))
   }
 
-  /** A turn tagged with its stable data-level bucket. */
-  final case class BucketedTurn(bucket: Int, conv_id: String, turn_idx: Int,
-      role: String, text: String, tool: String, ts: java.sql.Timestamp)
-
-  private final class BucketStats {
-    var nOk = 0L
-    var nFail = 0L
-    var nEmpty = 0L
-    val hist = new Array[Long](HistogramBins)
-    val t0: Long = System.nanoTime()
-  }
-
-  /** Core distributed extraction: bucket + salt, then one mapPartitions.
-    * Output is sorted within partitions by (conv_id, turn_idx) — stable
-    * turn ordering per the north rule. Lineage is tracked per data-level
-    * bucket (a partition may host several buckets after the hash
-    * exchange). */
+  /** Core distributed extraction: bucket + salt, then the extraction
+    * operator. Output is sorted within partitions by (conv_id, turn_idx)
+    * — stable turn ordering per the north rule. Lineage is tracked per
+    * data-level bucket (a partition may host several buckets after the
+    * hash exchange). */
   def run(spark: SparkSession, turns: Dataset[Turn], numBuckets: Int,
       fingerprint: String = "local"): Result =
     runImpl(spark, turns, numBuckets, fingerprint, exchange = true)
@@ -102,47 +102,13 @@ object ExtractJob {
     import spark.implicits._
     val tagged = turns
       .withColumn("bucket", bucketCol(numBuckets))
-      .select("bucket", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-      .as[BucketedTurn]
+      .select("bucket", "conv_id", "turn_idx", "text")
     val bucketed =
       (if (exchange) tagged.repartition(numBuckets, col("bucket")) else tagged)
         .sortWithinPartitions("conv_id", "turn_idx")
-
-    val acc: CollectionAccumulator[LineageRow] =
-      spark.sparkContext.collectionAccumulator[LineageRow]("graft.lineage")
-    val opts = ExtractOptions()
-
-    val extracted = bucketed.mapPartitions { it =>
-      val stats = mutable.LongMap.empty[BucketStats]
-      var pending = true
-      val out = it.map { bt =>
-        val t = Turn(bt.conv_id, bt.turn_idx, bt.role, bt.text, bt.tool, bt.ts)
-        val r = extractTurn(t, opts)
-        val s = stats.getOrElseUpdate(bt.bucket.toLong, new BucketStats)
-        if (r.failed) s.nFail += 1
-        else if (r.extracted_html == null) s.nEmpty += 1
-        else {
-          s.nOk += 1
-          val bin = math.min(math.max((r.confidence / 10).toInt, 0), HistogramBins - 1)
-          s.hist(bin) += 1
-        }
-        r
-      }
-      new Iterator[ExtractedTurn] {
-        def hasNext: Boolean = {
-          val h = out.hasNext
-          if (!h && pending) {
-            stats.foreach { case (bucket, s) =>
-              acc.add(LineageRow(fingerprint, bucket.toInt, s.nOk, s.nFail,
-                s.nEmpty, s.hist, (System.nanoTime() - s.t0) / 1000000L))
-            }
-            pending = false
-          }
-          h
-        }
-        def next(): ExtractedTurn = out.next()
-      }
-    }
+    val acc = spark.sparkContext.collectionAccumulator[PartitionLineage]("graft.lineage")
+    val extracted = GraftOps.plan(bucketed, Some(LineageTap(fingerprint, acc)))
+      .as[ExtractedTurn]
     new Result(extracted, acc)
   }
 

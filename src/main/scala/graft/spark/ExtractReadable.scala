@@ -1,13 +1,13 @@
 package graft.spark
 
-import graft.extract.{ExtractOptions, Extractor}
+import graft.extract.{ExtractOptions, Extractor, Summary}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -29,18 +29,8 @@ case class ExtractReadable(child: Expression)
 
   override def dataType: DataType = ExtractReadable.schema
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = Extractor.extract(input.toString, ExtractOptions())
-    val spans = new GenericArrayData(s.spans.map { case (a, b) =>
-      InternalRow(a, b)
-    }.asInstanceOf[Array[Any]])
-    InternalRow(
-      s.confidence,
-      if (s.html == null) null else UTF8String.fromString(s.html),
-      UTF8String.fromString(s.text),
-      spans,
-      s.failed)
-  }
+  override def nullSafeEval(input: Any): Any =
+    ExtractReadable.toRow(Extractor.extract(input.toString, ExtractOptions()))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -56,12 +46,21 @@ object ExtractReadable {
       StructField("end", IntegerType, nullable = false))), containsNull = false)),
     StructField("failed", BooleanType, nullable = false)))
 
-  private val info = new ExpressionInfo(
+  /** One extraction as a row of [[schema]] — the single encoder shared by
+    * this expression and [[ExtractTurnsExec]]. */
+  def toRow(s: Summary): InternalRow = InternalRow(
+    s.confidence,
+    if (s.html == null) null else UTF8String.fromString(s.html),
+    UTF8String.fromString(s.text),
+    new GenericArrayData(s.spans.map { case (a, b) => InternalRow(a, b) }.asInstanceOf[Array[Any]]),
+    s.failed)
+
+  val info = new ExpressionInfo(
     classOf[ExtractReadable].getName, null, "extract_readable",
     "_FUNC_(html) - readability main-content extraction of an HTML payload",
     "")
 
-  private val builder: Seq[Expression] => Expression = {
+  val builder: Seq[Expression] => Expression = {
     case Seq(e) => ExtractReadable(e)
     case other =>
       throw new IllegalArgumentException(
@@ -78,11 +77,7 @@ object ExtractReadable {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(
-      (FunctionIdentifier("extract_readable"),
-        new ExpressionInfo(classOf[ExtractReadable].getName, null,
-          "extract_readable",
-          "_FUNC_(html) - readability main-content extraction", ""),
-        (exprs: Seq[Expression]) => ExtractReadable(exprs.head)))
+      (FunctionIdentifier("extract_readable"), ExtractReadable.info, ExtractReadable.builder))
     ext.injectFunction(
       (FunctionIdentifier("dot_f64"),
         new ExpressionInfo(classOf[DotF64].getName, null, "dot_f64",

@@ -2,7 +2,7 @@ package graft
 
 import graft.spark.{ExtractJob, TranscriptGen, Turn}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.PlanTestUtil.finalPlan
+import graft.PlanTestUtil.{exchangeInputColumns, finalPlan, readSchemaColumns}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,6 +27,22 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** Both ExtractJob faces: extraction runs on the one operator, with no
+    * typed object path, and only the columns it reads reach the scan and
+    * the exchange. */
+  private def assertNarrowExtraction(df: DataFrame, plan: String): Unit = {
+    assert(plan.contains("ExtractTurns ") && !plan.contains("!ExtractTurns"), plan)
+    assert(!plan.contains("DeserializeToObject") && !plan.contains("MapPartitions"),
+      "extraction must not decode rows into objects\n" + plan)
+    val unused = Set("role", "tool", "ts")
+    val scans = readSchemaColumns(plan)
+    assert(scans.nonEmpty, plan)
+    scans.foreach(cols => assert(cols.forall(c => !unused.contains(c)),
+      s"scan reads unused columns: $cols\n" + plan))
+    exchangeInputColumns(df).foreach(cols => assert(cols.forall(c => !unused.contains(c)),
+      s"exchange carries unused columns: $cols\n" + plan))
+  }
 
   test("roundtrip scan: filter pushed to parquet, columns pruned, no keyed shuffle") {
     val plan = finalPlan(SparkEntry.queries("extract_roundtrip")(spark, sfDir))
@@ -90,6 +106,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // sort is partition-local (global=false) — no global ordering shuffle
     assert("Sort \\[conv_id[^\\]]+\\], false".r.findFirstIn(plan).isDefined,
       "expected partition-local sort\n" + plan)
+    assertNarrowExtraction(df, plan)
+    assert(exchangeInputColumns(df).map(_.toSet) ==
+      Seq(Set("bucket", "conv_id", "turn_idx", "text")), plan)
   }
 
   test("pre-bucketed extraction (Iceberg shape): zero exchanges, same results") {
@@ -106,6 +125,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pb = ExtractJob.runPreBucketed(spark, input, numBuckets = 8).extracted.toDF()
     val plan = finalPlan(pb)
     assert(!plan.contains("Exchange"), "pre-bucketed path must be map-only\n" + plan)
+    assertNarrowExtraction(pb, plan)
     // identical results to the exchange path
     val a = pb.select("conv_id", "turn_idx", "extracted_text")
       .as[(String, Int, String)].collect().sortBy(r => (r._1, r._2)).toSeq

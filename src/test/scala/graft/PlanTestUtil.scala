@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Shared plan-assertion helper for the plan-contract specs. */
-object PlanTestUtil {
+object PlanTestUtil extends AdaptiveSparkPlanHelper {
 
   /** Final executed plan string (run the query so AQE finalizes; strip
     * the "== Initial Plan ==" echo so nothing is counted twice). */
@@ -21,4 +23,16 @@ object PlanTestUtil {
   def keyedExchanges(plan: String): Int =
     "Exchange hashpartitioning".r.findAllIn(plan).size +
       "Exchange rangepartitioning".r.findAllIn(plan).size
+
+  /** Column names of every parquet `ReadSchema` in a plan string. */
+  def readSchemaColumns(plan: String): Seq[Seq[String]] =
+    "ReadSchema: struct<([^>]*)>".r.findAllMatchIn(plan).map(m =>
+      m.group(1).split(',').toSeq.map(_.takeWhile(_ != ':'))).toSeq
+
+  /** Input column names of every shuffle exchange in the executed plan,
+    * query stages included (run the query first, e.g. via [[finalPlan]]). */
+  def exchangeInputColumns(df: DataFrame): Seq[Seq[String]] =
+    collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e.child.output.map(_.name)
+    }
 }
