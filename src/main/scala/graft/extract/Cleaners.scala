@@ -54,17 +54,6 @@ object Cleaners {
     }
   }
 
-  private val onStar = java.util.regex.Pattern.compile("on*",
-    java.util.regex.Pattern.CASE_INSENSITIVE)
-
-  def isBadAttr(kRaw: String): Boolean = {
-    val k = kRaw.toLowerCase(java.util.Locale.ROOT)
-    k == "width" || k == "height" || k == "style" ||
-      (k.endsWith("color") && k.dropRight(5).forall(c => (c >= 'a' && c <= 'z') || c == '-')) ||
-      (k.startsWith("background") && k.drop(10).forall(c => (c >= 'a' && c <= 'z') || c == '-')) ||
-      onStar.matcher(k).matches()
-  }
-
   /** Python 2 `unicode.isspace()` — Unicode whitespace incl. NBSP and NEL,
     * which Java's `Character.isWhitespace` excludes. */
     @inline def pyIsSpace(c: Char): Boolean =

@@ -487,13 +487,6 @@ object Extractor {
     candidates
   }
 
-  private def countCommas(s: String): Int = {
-    var c = 0
-    var i = 0
-    while (i < s.length) { if (s.charAt(i) == ',') c += 1; i += 1 }
-    c
-  }
-
   /** `select_best_candidate` (readability.py:439-449) — top-1 by score.
     * Ties: the reference sorts an (unordered Py2) dict's values stably;
     * we break ties by first insertion, which is deterministic. */

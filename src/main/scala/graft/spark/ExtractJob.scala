@@ -92,7 +92,7 @@ object ExtractJob {
     * exchange is elided and the job is map-only (plus a partition-local
     * sort for stable turn ordering). Lineage still keys on the data-level
     * bucket. Correctness is identical to [[run]] — only the physical
-    * distribution differs (ScalingBench measures both). */
+    * distribution differs (`Bench scaling extract` measures both). */
   def runPreBucketed(spark: SparkSession, turns: Dataset[Turn], numBuckets: Int,
       fingerprint: String = "local"): Result =
     runImpl(spark, turns, numBuckets, fingerprint, exchange = false)

@@ -142,6 +142,10 @@ object Sketches {
     * column `is_true_heavy` exposes the sketch's false positives
     * instead of hiding them.
     *
+    * The corpus total is an unpartitioned window over the counter matrix,
+    * so one partition holds up to depth·width rows: 2048 at the defaults,
+    * ~16.8 M at the `require` bound (16 × 2^20).
+    *
     * Emits (word, cms_est, exact_cnt, is_true_heavy). */
   def cmsHeavyHitters(spark: SparkSession, sfDir: String,
       depth: Int = 4, width: Int = 512, heavyDenom: Int = 64): DataFrame = {
@@ -179,7 +183,7 @@ object Sketches {
       (0 until depth).iterator.map(r => (w, r, (Hash61.mix(h ^ seeds(r)) % width).toInt))
     }.toDF("word", "r", "col")
     val est = probes.join(countersT, Seq("r", "col"))
-      .groupBy("word").agg(min(col("c")).as("cms_est"), max(col("total")).as("total"))
+      .groupBy("word").agg(min(col("c")).as("cms_est"), first(col("total")).as("total"))
     val cand = est.where(col("cms_est") * heavyDenom >= col("total"))
     // exact pass restricted to the candidates the sketch surfaced
     val exact = words.join(broadcast(cand.select("word")), "word")

@@ -1,25 +1,23 @@
 package graft.spark
 
-import graft.extract.ExtractOptions
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamReader
 
 /** Structured Streaming face of the extraction stage. The reference and
   * the north rule are batch-first (resumable snapshot checkpoints, not
   * watermarks — SURVEY.md §2l), but the extraction operator itself is
-  * stateless per turn, so the streaming form is the same typed map over a
-  * `readStream` source: no state store, no watermark, exactly-once via
-  * sink checkpointing. Useful for incremental ingestion of new
-  * transcript partitions.
+  * stateless per turn, so the streaming form is the same `ExtractTurns`
+  * operator over a `readStream` source: no state store, no watermark,
+  * exactly-once via sink checkpointing. Useful for incremental ingestion
+  * of new transcript partitions.
   */
 object StreamingExtract {
 
   /** Transform a streaming Dataset[Turn] into extracted turns — the same
-    * per-turn function as the batch hot path. */
+    * `ExtractTurns` operator as the batch job. */
   def extractStream(turns: Dataset[Turn]): Dataset[ExtractedTurn] = {
     import turns.sparkSession.implicits._
-    val opts = ExtractOptions()
-    turns.mapPartitions { it => it.map(t => ExtractJob.extractTurn(t, opts)) }
+    GraftOps.extractTurns(turns.toDF()).as[ExtractedTurn]
   }
 
   /** Streaming exact dedup: first-seen row per content digest, duplicate

@@ -226,7 +226,7 @@ object TranscriptGen {
     * single conv_id carries ~1/megaMod of all turns — the adversarial
     * long-conversation shape the bucket salt exists for. SkewSpec pins
     * that the salted bucket key bounds this skew while the unsalted
-    * conv_id hash concentrates it; SkewBench measures it. */
+    * conv_id hash concentrates it; `Bench scaling skew` measures it. */
   def skewedTurns(spark: SparkSession, sfDir: String, turnsPerDoc: Int = 1,
       megaMod: Int = 5): Dataset[Turn] =
     turnsWith(spark, sfDir, turnsPerDoc,

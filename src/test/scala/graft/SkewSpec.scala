@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * conversation in one place. Both checks are DETERMINISTIC (row and
   * record counts, not wall time): the 100×-scale claim is about work
   * distribution, which local wall-clock on a shared box cannot pin.
-  * SkewBench measures the wall-clock side for BENCH.md. */
+  * `Bench scaling skew` measures the wall-clock side for BENCH.md. */
 class SkewSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
