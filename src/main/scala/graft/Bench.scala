@@ -1,6 +1,6 @@
 package graft
 
-import graft.spark.{Dedup, ExtractJob, GraftOps, Quality, TableIO, TranscriptGen}
+import graft.spark.{Dedup, ExtractJob, GraftOps, Quality, Scratch, TableIO, TranscriptGen}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
@@ -30,11 +30,6 @@ object Bench {
     * from `n` to 4`n` cores, curation volume multiplied `mult`×. */
   final case class Config(mode: Mode, cpus: Int, queryRuns: Int, tpd: Int, n: Int, mult: Int)
 
-  /** RAM-backed when available: disk is the noisiest shared resource. */
-  private val scratchRoot: String =
-    if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-
   def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -42,7 +37,7 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", s"$scratchRoot/graft-spark")
+      .config("spark.local.dir", Scratch.dir("graft-spark").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -373,7 +368,7 @@ object Bench {
             timed(Dedup.minhashLsh(spark, staged).count()))
           report(rl.eff, "mult" -> cfg.mult.toString, "rowlocal" -> rowLocal,
             "shuffle" -> shuffle)
-        } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staged))
+        } finally Scratch.deleteRecursively(new java.io.File(staged))
     }
   }
 
@@ -382,7 +377,7 @@ object Bench {
     * join cost, not a quadratic planted-duplicate pair explosion. */
   private def stageCuration(sfDir: String, n: Int, mult: Int): String = {
     val staged = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(scratchRoot), "curscale").toString
+      Scratch.root.toPath, "curscale").toString
     val spark = session(4 * n)
     try {
       // spread the SOURCE rows first (one small parquet file = one scan

@@ -31,32 +31,6 @@ object SparkEntry {
   // ruthless pass never falls into the lenient retry (SURVEY.md §2j).
   private val MinChars = 250
 
-  /** Scratch root for the within-query temp tables (persisted indices,
-    * shard sinks): RAM-backed when available, same rationale as Bench's
-    * `spark.local.dir` — the sandbox's shared disk is the noisiest
-    * resource; a real deployment writes indices to provisioned storage. */
-  private def scratchDir(prefix: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    val base =
-      if (shm.isDirectory && shm.canWrite) {
-        val d = new java.io.File(shm, "graft-scratch"); d.mkdirs(); d.toPath
-      } else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    // prune siblings no live query can still reference (queries run
-    // sequentially and a result is consumed within its bench/verify
-    // step) so a multi-SF sweep does not accumulate dead scratch tables
-    val cutoff = System.currentTimeMillis() - 20L * 60 * 1000
-    Option(base.toFile.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.lastModified() < cutoff)
-      .foreach(deleteRecursively)
-    java.nio.file.Files.createTempDirectory(base, prefix).toString
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val cs = f.listFiles()
-    if (cs != null) cs.foreach(deleteRecursively)
-    f.delete()
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- extraction engine (S1-S4, P1-P12, A1-A6, W1-W2, 2i, 2j) ----
     "extract_roundtrip" -> ((s, dir) => {
@@ -341,7 +315,7 @@ object SparkEntry {
     // then answer the workload as a pure index probe — no re-training,
     // no re-assignment (plan pinned in PlanSpec)
     "ann_ivf_indexed" -> ((s, dir) => {
-      val io = TableIO(s, scratchDir("ivf_index_"))
+      val io = TableIO(s, Scratch.tableDir("ivf_index_"))
       Similarity.writeIvfIndex(s, dir, io)
       Similarity.ivfTopKIndexed(s, dir, io)
     }),
@@ -350,7 +324,7 @@ object SparkEntry {
     // once, the ADC scan reads the codes table instead of the embedding
     // bytes, full vectors fetched only for the shortlist re-rank
     "ann_pq_indexed" -> ((s, dir) => {
-      val io = TableIO(s, scratchDir("pq_index_"))
+      val io = TableIO(s, Scratch.tableDir("pq_index_"))
       Similarity.writePqIndex(s, dir, io)
       Similarity.pqTopKIndexed(s, dir, io)
     }),
@@ -568,7 +542,7 @@ object SparkEntry {
     // written through TableIO once; the workload probes the stored index
     // and never rescans the corpus text (plan pinned in PlanSpec)
     "bm25_topk_indexed" -> ((s, dir) => {
-      val io = TableIO(s, scratchDir("bm25_index_"))
+      val io = TableIO(s, Scratch.tableDir("bm25_index_"))
       Retrieval.writeIndex(s, dir, io)
       Retrieval.bm25TopKIndexed(s, io)
     }),
@@ -588,7 +562,7 @@ object SparkEntry {
       // assignment, dynamic-partition-overwrite write through TableIO,
       // manifest computed FROM THE WRITTEN TABLE (audits the disk state;
       // retry bit-exactness is pinned in SparkPipelineSpec)
-      val out = scratchDir("graft-shards")
+      val out = Scratch.tableDir("graft-shards")
       Shards.write(s, TableIO(s, dir).read("documents"), TableIO(s, out),
         "shards", numShards = 64)
     }),

@@ -49,9 +49,10 @@ object HtmlParser {
     val root = parse(html)
     val body = root.findFirst("body")
     val host = if (body != null) body else root
-    host.children.find(_.isElement).getOrElse {
-      throw new IllegalArgumentException("no root element in fragment")
-    }
+    var c = host.firstChild
+    while (c != null && !c.isElement) c = c.nextSibling
+    if (c == null) throw new IllegalArgumentException("no root element in fragment")
+    c
   }
 
   private final class Parser(in: String) {
@@ -128,7 +129,7 @@ object HtmlParser {
       val n = new Node(Node.Pi)
       n.text = content.stripSuffix("?")
       // PIs are dropped by the cleaner anyway; attach only inside body
-      if (inBody) appendNode(n)
+      if (inBody) cur.append(n)
     }
 
     private def parseEndTag(): Unit = {
@@ -152,7 +153,7 @@ object HtmlParser {
       val start = i
       while (i < len && isNameChar(in.charAt(i))) i += 1
       val name = in.substring(start, i).toLowerCase(java.util.Locale.ROOT)
-      var attrPairs: mutable.ArrayBuffer[(String, String)] = null
+      var attrs: mutable.LinkedHashMap[String, String] = null
       // attribute scanning
       var done = false
       while (!done && i < len) {
@@ -187,13 +188,14 @@ object HtmlParser {
             }
           }
           if (aname.nonEmpty) {
-            if (attrPairs == null) attrPairs = new mutable.ArrayBuffer[(String, String)](4)
-            if (!attrPairs.exists(_._1 == aname)) attrPairs += (aname -> avalue)
+            // the first of duplicate names wins (libxml2)
+            if (attrs == null) attrs = mutable.LinkedHashMap.empty
+            if (!attrs.contains(aname)) attrs.update(aname, avalue)
           }
         }
       }
       pos = i
-      startTag(name, attrPairs)
+      startTag(name, attrs)
       if (rawText.contains(name)) consumeRawText(name, decodeEntities = false)
       else if (rcdata.contains(name)) consumeRawText(name, decodeEntities = true)
     }
@@ -246,8 +248,7 @@ object HtmlParser {
       ensureRoot()
       if (head == null) {
         head = new Node("head")
-        head.parent = root
-        root.children += head
+        root.append(head)
       }
     }
 
@@ -256,8 +257,7 @@ object HtmlParser {
       if (body == null) {
         ensureHead()
         body = new Node("body")
-        body.parent = root
-        root.children += body
+        root.append(body)
       }
       if (!inBody) {
         inBody = true
@@ -289,8 +289,8 @@ object HtmlParser {
       if (atEof) return true
       val t = cur
       if (t.tag == "body") return false
-      if (t.children.nonEmpty) {
-        val last = t.children(t.children.length - 1)
+      val last = t.lastChild
+      if (last != null) {
         if (last.tail != null) return false // lastChild is a text node
         if (last.isElement &&
           (last.tag == "b" || last.tag == "bold" || last.tag == "em")) return false
@@ -314,8 +314,8 @@ object HtmlParser {
       } else if (dropsBlankRun(raw, atEof)) return
       val text = Entities.decode(raw)
       val t = cur
-      if (t.children.nonEmpty) {
-        val last = t.children(t.children.length - 1)
+      val last = t.lastChild
+      if (last != null) {
         last.tail = (if (last.tail == null) "" else last.tail) + text
       } else {
         t.text = (if (t.text == null) "" else t.text) + text
@@ -326,13 +326,7 @@ object HtmlParser {
       if (!inBody) return // pre-body comments dropped (cleaner would anyway)
       val n = new Node(Node.Comment)
       n.text = content
-      appendNode(n)
-    }
-
-    private def appendNode(n: Node): Unit = {
-      val t = cur
-      n.parent = t
-      t.children += n
+      cur.append(n)
     }
 
     /** libxml2 `htmlAutoClose`: pop open elements WHILE the innermost one
@@ -355,21 +349,21 @@ object HtmlParser {
         stack.remove(stack.length - 1)
     }
 
-    private def startTag(name: String, attrPairs: mutable.ArrayBuffer[(String, String)]): Unit = {
+    private def startTag(name: String, attrs: mutable.LinkedHashMap[String, String]): Unit = {
       name match {
         case "html" =>
           ensureRoot()
-          if (attrPairs != null) attrPairs.foreach { case (k, v) =>
+          if (attrs != null) attrs.foreach { case (k, v) =>
             if (root.attr(k) == null) root.setAttr(k, v)
           }
           return
         case "head" =>
-          if (!inBody) { ensureHead(); if (attrPairs != null)
-            attrPairs.foreach { case (k, v) => head.setAttr(k, v) } }
+          if (!inBody) { ensureHead(); if (attrs != null)
+            attrs.foreach { case (k, v) => head.setAttr(k, v) } }
           return
         case "body" =>
           ensureBody()
-          if (attrPairs != null) attrPairs.foreach { case (k, v) =>
+          if (attrs != null) attrs.foreach { case (k, v) =>
             if (body.attr(k) == null) body.setAttr(k, v)
           }
           return
@@ -378,14 +372,11 @@ object HtmlParser {
 
       if (!inBody && headOnly.contains(name)) {
         ensureHead()
-        val n = mkNode(name, attrPairs)
-        n.parent = head
-        head.children += n
+        val n = mkNode(name, attrs)
+        head.append(n)
+        // pushed, it is `cur` for the caller's raw-text consumption
+        // (script/style/title)
         if (!voidElements.contains(name)) stack += n
-        // raw-text consumption (script/style/title) reads `cur`
-        if (rawText.contains(name) || rcdata.contains(name)) {
-          // handled by caller via consumeRawText; make it the current node
-        }
         return
       }
 
@@ -393,14 +384,14 @@ object HtmlParser {
 
       runAutoClose(name)
 
-      val n = mkNode(name, attrPairs)
-      appendNode(n)
+      val n = mkNode(name, attrs)
+      cur.append(n)
       if (!voidElements.contains(name)) stack += n
     }
 
-    private def mkNode(name: String, attrPairs: mutable.ArrayBuffer[(String, String)]): Node = {
+    private def mkNode(name: String, attrs: mutable.LinkedHashMap[String, String]): Node = {
       val n = new Node(name)
-      if (attrPairs != null) attrPairs.foreach { case (k, v) => n.setAttr(k, v) }
+      if (attrs != null) n.adoptAttrs(attrs)
       n
     }
 

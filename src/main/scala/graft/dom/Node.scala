@@ -9,6 +9,18 @@ import scala.collection.mutable
   * text/tail model). This value type lives only *inside* a Spark partition —
   * it is never shuffled (SURVEY.md §1).
   *
+  * Layout: libxml2's. A parent holds `firstChild`/`lastChild`; each child
+  * holds `parent`, `prevSibling` and `nextSibling`. The child list is private
+  * to this class: [[append]], [[insertBefore]], [[detach]] and [[dropTree]]
+  * are its only writers, and each is O(1), as is every sibling step, so a
+  * walk or an edit never scans a sibling list for a position. Walkers loop
+  * `firstChild … nextSibling`; [[children]] is a snapshot built per call.
+  *
+  * [[detach]] clears the node's own `parent` and sibling links, so a detached
+  * subtree is closed: a depth-first step that climbs out of it finds no
+  * parent and ends. [[iterSubtree]] relies on this to reproduce lxml's
+  * `iter()` after the current element is dropped (see there).
+  *
   * Comments / processing instructions are represented as nodes with the
   * special tags [[Node.Comment]] / [[Node.Pi]]; their payload lives in
   * `text`. They are excluded from `textContent` and `findAll`, matching
@@ -17,9 +29,27 @@ import scala.collection.mutable
 final class Node(var tag: String) {
   var text: String = null
   var tail: String = null
-  var parent: Node = null
   private var _attrs: mutable.LinkedHashMap[String, String] = null
-  val children = new mutable.ArrayBuffer[Node](4)
+  private var _parent: Node = null
+  private var _first: Node = null
+  private var _last: Node = null
+  private var _prev: Node = null
+  private var _next: Node = null
+
+  def parent: Node = _parent
+  def firstChild: Node = _first
+  def lastChild: Node = _last
+  def prevSibling: Node = _prev
+  def nextSibling: Node = _next
+
+  /** The children in order, as a snapshot: later edits do not show in it
+    * (lxml `getchildren()`). */
+  def children: IndexedSeq[Node] = {
+    val b = Vector.newBuilder[Node]
+    var c = _first
+    while (c != null) { b += c; c = c._next }
+    b.result()
+  }
 
   def isComment: Boolean = tag == Node.Comment
   def isPi: Boolean = tag == Node.Pi
@@ -30,6 +60,8 @@ final class Node(var tag: String) {
     if (_attrs == null) _attrs = mutable.LinkedHashMap.empty
     _attrs
   }
+  /** Takes `m` as this node's attribute map (the parser's per-tag map). */
+  private[dom] def adoptAttrs(m: mutable.LinkedHashMap[String, String]): Unit = _attrs = m
   /** lxml `elem.get(name)` → null when absent. */
   def attr(name: String): String =
     if (_attrs == null) null else _attrs.getOrElse(name, null)
@@ -42,57 +74,75 @@ final class Node(var tag: String) {
   /** Append, moving the child out of any previous parent (lxml `append`). */
   def append(child: Node): Unit = {
     child.detach()
-    child.parent = this
-    children += child
+    child._parent = this
+    child._prev = _last
+    if (_last != null) _last._next = child else _first = child
+    _last = child
   }
 
-  /** Insert at index, moving the child out of any previous parent. */
-  def insert(index: Int, child: Node): Unit = {
+  /** Insert `child` right before `ref`, one of this node's children, moving
+    * it out of any previous parent (lxml `ref.addprevious(child)`). */
+  def insertBefore(ref: Node, child: Node): Unit = {
+    if (ref._parent ne this)
+      throw new IllegalArgumentException(s"$ref is not a child of $this")
     child.detach()
-    child.parent = this
-    children.insert(index, child)
+    child._parent = this
+    child._prev = ref._prev
+    child._next = ref
+    if (ref._prev != null) ref._prev._next = child else _first = child
+    ref._prev = child
   }
 
-  def indexOf(child: Node): Int = children.indexOf(child)
-
-  /** Detach this node (and its tail) from its parent, if any. */
+  /** Detach this node (and its tail) from its parent, if any, and clear its
+    * own parent and sibling links. */
   def detach(): Unit = {
-    if (parent != null) {
-      val i = parent.children.indexOf(this)
-      if (i >= 0) parent.children.remove(i)
-      parent = null
+    val p = _parent
+    if (p != null) {
+      if (_prev != null) _prev._next = _next else p._first = _next
+      if (_next != null) _next._prev = _prev else p._last = _prev
+      _parent = null
+      _prev = null
+      _next = null
     }
-  }
-
-  def prevSibling: Node = {
-    if (parent == null) return null
-    val i = parent.children.indexOf(this)
-    if (i > 0) parent.children(i - 1) else null
   }
 
   /** lxml `drop_tree()`: removes the node and its whole subtree; the tail
     * text is joined to the previous sibling's tail or the parent's text
     * (/root/reference/readability/readability.py:379 relies on this). */
   def dropTree(): Unit = {
-    val p = parent
+    val p = _parent
     if (p == null) return
     if (tail != null && tail.nonEmpty) {
-      val prev = prevSibling
+      val prev = _prev
       if (prev == null) p.text = (if (p.text == null) "" else p.text) + tail
       else prev.tail = (if (prev.tail == null) "" else prev.tail) + tail
     }
     detach()
   }
 
-  /** Self + all descendants, document order (lxml `iter()`). */
+  /** Self + all descendants, document order (lxml `iter()`). Like lxml, the
+    * iterator steps to the successor of a node when it hands the node out,
+    * before the caller's loop body runs. Dropping the current node therefore
+    * sends the walk into the node's detached subtree, and the walk ends at
+    * that subtree's end, since its root has no parent to climb through. A
+    * dropped childless node does not disturb the walk. */
   def iterSubtree: Iterator[Node] = {
-    val stack = mutable.Stack[Node](this)
+    val top = this
     new Iterator[Node] {
-      def hasNext: Boolean = stack.nonEmpty
+      private var nxt: Node = top
+      def hasNext: Boolean = nxt != null
       def next(): Node = {
-        val n = stack.pop()
-        var i = n.children.length - 1
-        while (i >= 0) { stack.push(n.children(i)); i -= 1 }
+        val n = nxt
+        nxt = if (n._first != null) n._first else {
+          var c = n
+          var succ: Node = null
+          while (succ == null && c != null && (c ne top)) {
+            if (c._parent == null) c = null
+            else if (c._next != null) succ = c._next
+            else c = c._parent
+          }
+          succ
+        }
         n
       }
     }
@@ -103,12 +153,11 @@ final class Node(var tag: String) {
   def findAll(tagName: String): mutable.ArrayBuffer[Node] = {
     val out = new mutable.ArrayBuffer[Node]
     def walk(n: Node): Unit = {
-      var i = 0
-      while (i < n.children.length) {
-        val c = n.children(i)
+      var c = n._first
+      while (c != null) {
         if (c.tag == tagName) out += c
         walk(c)
-        i += 1
+        c = c._next
       }
     }
     walk(this)
@@ -119,12 +168,11 @@ final class Node(var tag: String) {
   def findFirst(tagName: String): Node = {
     var found: Node = null
     def walk(n: Node): Boolean = {
-      var i = 0
-      while (i < n.children.length) {
-        val c = n.children(i)
+      var c = n._first
+      while (c != null) {
         if (c.tag == tagName) { found = c; return true }
         if (walk(c)) return true
-        i += 1
+        c = c._next
       }
       false
     }
@@ -139,30 +187,15 @@ final class Node(var tag: String) {
     val sb = new java.lang.StringBuilder
     def walk(n: Node): Unit = {
       if (n.isElement && n.text != null) sb.append(n.text)
-      var i = 0
-      while (i < n.children.length) {
-        val c = n.children(i)
+      var c = n._first
+      while (c != null) {
         walk(c)
         if (c.tail != null) sb.append(c.tail)
-        i += 1
+        c = c._next
       }
     }
     walk(this)
     sb.toString
-  }
-
-  /** Following siblings in order (lxml `itersiblings()`). */
-  def siblingsAfter: Iterator[Node] = {
-    if (parent == null) return Iterator.empty
-    val i = parent.children.indexOf(this)
-    parent.children.iterator.drop(i + 1)
-  }
-
-  /** Preceding siblings, nearest first (lxml `itersiblings(preceding=True)`). */
-  def siblingsBefore: Iterator[Node] = {
-    if (parent == null) return Iterator.empty
-    val i = parent.children.indexOf(this)
-    parent.children.take(i).reverseIterator
   }
 
   override def toString: String = {
@@ -175,10 +208,4 @@ final class Node(var tag: String) {
 object Node {
   val Comment = "#comment"
   val Pi = "#pi"
-
-  def elem(tag: String, attrPairs: (String, String)*): Node = {
-    val n = new Node(tag)
-    attrPairs.foreach { case (k, v) => n.setAttr(k, v) }
-    n
-  }
 }

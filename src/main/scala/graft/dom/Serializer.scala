@@ -19,10 +19,10 @@ object Serializer {
     * (/root/reference/readability/readability.py:364). */
   def serializeChildren(n: Node): String = {
     val sb = new java.lang.StringBuilder(128)
-    var i = 0
-    while (i < n.children.length) {
-      write(n.children(i), sb, includeTail = true)
-      i += 1
+    var c = n.firstChild
+    while (c != null) {
+      write(c, sb, includeTail = true)
+      c = c.nextSibling
     }
     sb.toString
   }
@@ -53,10 +53,10 @@ object Serializer {
           if (rawText.contains(n.tag)) sb.append(n.text)
           else escapeText(n.text, sb)
         }
-        var i = 0
-        while (i < n.children.length) {
-          write(n.children(i), sb, includeTail = true)
-          i += 1
+        var c = n.firstChild
+        while (c != null) {
+          write(c, sb, includeTail = true)
+          c = c.nextSibling
         }
         sb.append("</").append(n.tag).append('>')
       }

@@ -20,18 +20,15 @@ object Cleaners {
     * drop_tree-style removal via `el.drop_tree()`). */
   def cleanHtml(root: Node): Unit = {
     def walk(n: Node): Unit = {
-      // iterate over a snapshot since we mutate the child list
-      var i = 0
-      while (i < n.children.length) {
-        val c = n.children(i)
-        if (c.isComment || c.isPi || killTags.contains(c.tag)) {
-          c.dropTree()
-          // child list shrank; re-check same index
-        } else {
+      var c = n.firstChild
+      while (c != null) {
+        val next = c.nextSibling // dropTree clears c's links
+        if (c.isComment || c.isPi || killTags.contains(c.tag)) c.dropTree()
+        else {
           cleanNodeAttrs(c)
           walk(c)
-          i += 1
         }
+        c = next
       }
     }
     cleanNodeAttrs(root)
@@ -172,59 +169,33 @@ object Cleaners {
     val c = new CleanLengthCounter
     def walk(x: Node): Unit = {
       if (x.isElement && x.text != null) c.accept(x.text)
-      var i = 0
-      while (i < x.children.length) {
-        val ch = x.children(i)
+      var ch = x.firstChild
+      while (ch != null) {
         walk(ch)
         if (ch.tail != null) c.accept(ch.tail)
-        i += 1
+        ch = ch.nextSibling
       }
     }
     walk(n)
     c.result
   }
 
-  /** Streaming comma count of `node.text_content()`, early-exits at `cap`
-    * (sanitize only tests `< 10`, readability.py:480). */
-  def commasAtLeast(n: Node, cap: Int): Boolean = {
-    var count = 0
-    def countIn(s: String): Boolean = {
-      var i = 0
-      while (i < s.length) {
-        if (s.charAt(i) == ',') { count += 1; if (count >= cap) return true }
-        i += 1
-      }
-      false
-    }
-    def walk(x: Node): Boolean = {
-      if (x.isElement && x.text != null && countIn(x.text)) return true
-      var i = 0
-      while (i < x.children.length) {
-        val ch = x.children(i)
-        if (walk(ch)) return true
-        if (ch.tail != null && countIn(ch.tail)) return true
-        i += 1
-      }
-      false
-    }
-    walk(n)
-  }
-
-  /** Streaming exact comma count over a subtree. */
-  def countCommas(n: Node): Int = {
+  /** Streaming comma count of `node.text_content()`: `min(count, cap)`,
+    * stopping the walk once `cap` is reached (sanitize only tests `< 10`,
+    * readability.py:480). */
+  def countCommas(n: Node, cap: Int = Int.MaxValue): Int = {
     var count = 0
     def countIn(s: String): Unit = {
       var i = 0
-      while (i < s.length) { if (s.charAt(i) == ',') count += 1; i += 1 }
+      while (count < cap && i < s.length) { if (s.charAt(i) == ',') count += 1; i += 1 }
     }
     def walk(x: Node): Unit = {
       if (x.isElement && x.text != null) countIn(x.text)
-      var i = 0
-      while (i < x.children.length) {
-        val ch = x.children(i)
+      var ch = x.firstChild
+      while (count < cap && ch != null) {
         walk(ch)
         if (ch.tail != null) countIn(ch.tail)
-        i += 1
+        ch = ch.nextSibling
       }
     }
     walk(n)

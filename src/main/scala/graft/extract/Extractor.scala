@@ -185,9 +185,8 @@ object Extractor {
     }
     def walk(n: Node): Unit = {
       if (n.isElement && n.text != null) feed(n.text)
-      var i = 0
-      while (i < n.children.length) {
-        val c = n.children(i)
+      var c = n.firstChild
+      while (c != null) {
         var isA = false
         if (c.isElement) {
           c.tag match {
@@ -207,7 +206,7 @@ object Extractor {
           linkLen += cnt.result
         }
         if (c.tail != null) feed(c.tail)
-        i += 1
+        c = c.nextSibling
       }
     }
     walk(elem)
@@ -223,28 +222,14 @@ object Extractor {
   // ---------- P4: remove_unlikely_candidates ----------
 
   /** Replicates lxml's `doc.iter()` mutation semantics exactly
-    * (readability.py:369-379): lxml's depth-first iterator precomputes the
-    * next node from the current one BEFORE the loop body runs, so dropping
-    * the current element makes iteration descend into the *detached*
-    * subtree and terminate at its end (the detached root has no parent to
-    * walk up through). A dropped childless element does not disturb
-    * iteration. This quirk shaped the golden fixtures and is preserved. */
-  def removeUnlikelyCandidates(doc: Node): Unit = {
-    def nextOf(top: Node, n: Node): Node = {
-      if (n.children.nonEmpty) return n.children(0)
-      var c = n
-      while (c != null && !(c eq top)) {
-        val p = c.parent
-        if (p == null) return null
-        val i = p.children.indexOf(c)
-        if (i >= 0 && i + 1 < p.children.length) return p.children(i + 1)
-        c = p
-      }
-      null
-    }
-    var current: Node = doc
-    while (current != null) {
-      val nxt = nextOf(doc, current)
+    * (readability.py:369-379) through [[Node.iterSubtree]], which steps
+    * past the current node before the loop body runs: dropping the current
+    * element makes iteration descend into the *detached* subtree and
+    * terminate at its end, so its following siblings are not visited in
+    * this pass. A dropped childless element does not disturb iteration.
+    * This quirk shaped the golden fixtures and is preserved. */
+  def removeUnlikelyCandidates(doc: Node): Unit =
+    doc.iterSubtree.foreach { current =>
       if (current.isElement) {
         val s = current.attrOr("class", "") + " " + current.attrOr("id", "")
         if (Regexes.search(Regexes.unlikelyCandidates, s) &&
@@ -254,9 +239,7 @@ object Extractor {
           current.dropTree()
         }
       }
-      current = nxt
     }
-  }
 
   // ---------- P5-P9: double-break and misused-div transforms ----------
 
@@ -269,9 +252,11 @@ object Extractor {
   def splitIntoParts(elem: Node): mutable.ArrayBuffer[Part] = {
     val parts = new mutable.ArrayBuffer[Part]
     if (elem.text != null) { parts += Left(elem.text); elem.text = null }
-    elem.children.foreach { child =>
+    var child = elem.firstChild
+    while (child != null) {
       parts += Right(child)
       if (child.tail != null) { parts += Left(child.tail); child.tail = null }
+      child = child.nextSibling
     }
     parts
   }
@@ -323,16 +308,13 @@ object Extractor {
         p.append(n)
         lastElement = n
     }
-    if ((p.text == null || Cleaners.strip(p.text).isEmpty) && p.children.isEmpty) null
+    if ((p.text == null || Cleaners.strip(p.text).isEmpty) && p.firstChild == null) null
     else p
   }
 
   private def insertP(parent: Node, atElem: Node, parts: mutable.ArrayBuffer[Part]): Unit = {
     val p = makeParagraphFromParts(parts)
-    if (p != null) {
-      val index = parent.indexOf(atElem)
-      parent.insert(index, p)
-    }
+    if (p != null) parent.insertBefore(atElem, p)
     parts.clear()
   }
 
@@ -432,10 +414,15 @@ object Extractor {
         tagHit == java.lang.Boolean.TRUE ||
           (Serializer.isRawText(n.tag) && n.text != null &&
             Regexes.search(Regexes.divToPElements, n.text)) ||
-          n.children.exists(matches)
+          anyChildMatches(n)
       }
     }
-    elem.children.exists(matches)
+    def anyChildMatches(n: Node): Boolean = {
+      var c = n.firstChild
+      while (c != null && !matches(c)) c = c.nextSibling
+      c != null
+    }
+    anyChildMatches(elem)
   }
 
   // ---------- A3/A4: score_paragraphs ----------
@@ -517,7 +504,7 @@ object Extractor {
     val bestElem = best.elem
     if (bestElem.parent == null)
       throw new UnparseableException("best candidate has no parent")
-    val siblings = bestElem.parent.children.toList // snapshot (getchildren())
+    val siblings = bestElem.parent.children // snapshot (getchildren())
     siblings.foreach { sibling =>
       var append = false
       if (sibling eq bestElem) append = true
@@ -574,7 +561,7 @@ object Extractor {
 
         if (weight + contentScore < 0) {
           el.dropTree()
-        } else if (!Cleaners.commasAtLeast(el, 10)) {
+        } else if (Cleaners.countCommas(el, 10) < 10) {
           val st = subtreeStats(el)
           val pCount = st.p
           val imgCount = st.img
@@ -594,18 +581,21 @@ object Extractor {
           else if (weight >= 25 && ld > 0.5) toRemove = true
           else if ((embedCount == 1 && contentLength < 75) || embedCount > 1) {
             toRemove = true
-            // sibling-text rescue — nested in this branch only (see note)
+            // sibling-text rescue — nested in this branch only (see note);
+            // the first non-empty sibling of each `itersiblings` direction
             var followingLen = -1
-            val itF = el.siblingsAfter
-            while (followingLen < 0 && itF.hasNext) {
-              val l = textLength(itF.next())
+            var sib = el.nextSibling
+            while (followingLen < 0 && sib != null) {
+              val l = textLength(sib)
               if (l > 0) followingLen = l
+              sib = sib.nextSibling
             }
             var precedingLen = -1
-            val itP = el.siblingsBefore
-            while (precedingLen < 0 && itP.hasNext) {
-              val l = textLength(itP.next())
+            sib = el.prevSibling
+            while (precedingLen < 0 && sib != null) {
+              val l = textLength(sib)
               if (l > 0) precedingLen = l
+              sib = sib.prevSibling
             }
             val sum = math.max(followingLen, 0) + math.max(precedingLen, 0)
             if ((followingLen > 0 || precedingLen > 0) && sum > 1000) {
@@ -758,20 +748,24 @@ object Extractor {
       val isBlock = !inlineTags.contains(n.tag)
       if (isBlock) boundary()
       if (n.text != null) add(n.text)
-      n.children.foreach { c =>
+      var c = n.firstChild
+      while (c != null) {
         walk(c)
         if (c.tail != null) add(c.tail)
+        c = c.nextSibling
       }
       if (isBlock) boundary()
     }
     val spans = new mutable.ArrayBuffer[(Int, Int)]
     if (article.isElement && article.text != null) add(article.text)
-    article.children.foreach { c =>
+    var c = article.firstChild
+    while (c != null) {
       val start0 = sb.length + (if (pendingSpace) 1 else 0)
       walk(c)
       val end = sb.length
       if (end > start0) spans += ((start0, end))
       if (c.tail != null) add(c.tail)
+      c = c.nextSibling
     }
     (sb.toString, spans.toArray)
   }

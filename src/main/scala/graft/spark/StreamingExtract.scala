@@ -68,19 +68,6 @@ object StreamingExtract {
     }.select(col("turn_idx").cast("long").as("doc_id"), col("extracted_text"))
   }
 
-  /** RAM-backed scratch root for replay staging + streaming checkpoints —
-    * same rationale as Bench's `spark.local.dir`: the sandbox's shared
-    * disk is the noisiest resource, a real cluster has provisioned
-    * scratch storage. Falls back to java.io.tmpdir. */
-  private[spark] def replayScratchRoot(): java.nio.file.Path = {
-    val shm = new java.io.File("/dev/shm")
-    val base =
-      if (shm.isDirectory && shm.canWrite) new java.io.File(shm, "graft-replay")
-      else new java.io.File(System.getProperty("java.io.tmpdir"))
-    base.mkdirs()
-    base.toPath
-  }
-
   /** Stage `classed` — which must carry an integer column `cls` in
     * [0, nClasses) — as ONE parquet file per class under a fresh temp
     * dir, with strictly increasing modification times, and return that
@@ -99,7 +86,7 @@ object StreamingExtract {
       nClasses: Int): String = {
     import org.apache.spark.sql.functions.col
     val root = java.nio.file.Files.createTempDirectory(
-      replayScratchRoot(), "replay_stage_")
+      Scratch.dir("graft-replay").toPath, "replay_stage_")
     val stageDir = root.resolve("stage")
     classed.repartition(nClasses, col("cls"))
       .write.mode("overwrite").partitionBy("cls").parquet(stageDir.toString)
@@ -176,13 +163,7 @@ object StreamingExtract {
         spark.table(name)
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     spark.catalog.dropTempView(name)
-    deleteRecursively(root.toFile)
+    Scratch.deleteRecursively(root.toFile)
     out
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val cs = f.listFiles()
-    if (cs != null) cs.foreach(deleteRecursively)
-    f.delete()
   }
 }

@@ -55,7 +55,7 @@ class CleanLengthSpec extends AnyFunSuite {
     }
   }
 
-  test("commasAtLeast / countCommas") {
+  test("countCommas: exact and capped") {
     val n = new Node("div")
     n.text = "a,b,c"
     val child = new Node("p")
@@ -63,7 +63,8 @@ class CleanLengthSpec extends AnyFunSuite {
     child.tail = ","
     n.append(child)
     assert(Cleaners.countCommas(n) == 5)
-    assert(Cleaners.commasAtLeast(n, 5))
-    assert(!Cleaners.commasAtLeast(n, 6))
+    assert(Cleaners.countCommas(n, cap = 5) >= 5)
+    assert(!(Cleaners.countCommas(n, cap = 6) >= 6))
+    assert(Cleaners.countCommas(n, cap = 3) == 3)
   }
 }

@@ -82,12 +82,14 @@ class DomSpec extends AnyFunSuite {
 
   test("attributes: quoting styles, case, duplicates") {
     val doc = HtmlParser.parse(
-      "<body><div ID=\"Main\" class='a b' data-x=1 checked novalue>x</div></body>")
+      "<body><div ID=\"Main\" class='a b' data-x=1 checked novalue>x</div><div id=a ID=b>y</div></body>")
     val div = doc.findFirst("div")
     assert(div.attr("id") == "Main")
     assert(div.attr("class") == "a b")
     assert(div.attr("data-x") == "1")
     assert(div.attr("checked") == "")
+    val dup = doc.findAll("div")(1)
+    assert(dup.attrs.toList == List("id" -> "a"))
   }
 
   test("drop_tree keeps tail") {
@@ -98,6 +100,103 @@ class DomSpec extends AnyFunSuite {
     doc.findFirst("b").dropTree()
     assert(div.text == "atail1tail2")
     assert(div.children.isEmpty)
+  }
+
+  /** Tags of `p`'s children, read forward through the sibling links; fails
+    * unless the backward links, `parent` and the end links agree. */
+  private def linkedTags(p: Node): List[String] = {
+    val fwd = Iterator.iterate(p.firstChild)(_.nextSibling).takeWhile(_ != null).toList
+    val bwd = Iterator.iterate(p.lastChild)(_.prevSibling).takeWhile(_ != null).toList
+    assert(bwd == fwd.reverse)
+    assert(fwd.forall(_.parent eq p))
+    assert(fwd.headOption.forall(_.prevSibling == null))
+    assert(fwd.lastOption.forall(_.nextSibling == null))
+    assert(fwd == p.children.toList)
+    fwd.map(_.tag)
+  }
+
+  private def detachedClean(n: Node): Unit =
+    assert(n.parent == null && n.prevSibling == null && n.nextSibling == null)
+
+  private def kids(tags: String*): Node = {
+    val p = new Node("div")
+    tags.foreach(t => p.append(new Node(t)))
+    p
+  }
+
+  test("links: append moves a node between parents (lxml move semantics)") {
+    val a = kids("x", "y", "z")
+    val b = kids("u")
+    val y = a.children(1)
+    b.append(y)
+    assert(linkedTags(a) == List("x", "z"))
+    assert(linkedTags(b) == List("u", "y"))
+    // re-appending to the same parent moves it to the end
+    b.append(b.firstChild)
+    assert(linkedTags(b) == List("y", "u"))
+    // moving the only child empties the old parent
+    val c = kids("only")
+    a.append(c.firstChild)
+    assert(linkedTags(c) == Nil)
+    assert(c.firstChild == null && c.lastChild == null)
+    assert(linkedTags(a) == List("x", "z", "only"))
+  }
+
+  test("links: insertBefore at the head and in the middle") {
+    val p = kids("a", "c")
+    p.insertBefore(p.firstChild, new Node("head"))
+    assert(linkedTags(p) == List("head", "a", "c"))
+    p.insertBefore(p.lastChild, new Node("b"))
+    assert(linkedTags(p) == List("head", "a", "b", "c"))
+    // the inserted node moves out of its old parent
+    val other = kids("m")
+    p.insertBefore(p.children(1), other.firstChild)
+    assert(linkedTags(p) == List("head", "m", "a", "b", "c"))
+    assert(linkedTags(other) == Nil)
+    val stranger = new Node("s")
+    assertThrows[IllegalArgumentException](p.insertBefore(stranger, new Node("t")))
+  }
+
+  test("links: dropTree on the first, last and only child joins the tail") {
+    val doc = HtmlParser.parse("<body><div>t<i>1</i>a<b>2</b>b<u>3</u>c</div><p><s>4</s>d</p></body>")
+    val div = doc.findFirst("div")
+    val first = div.firstChild
+    first.dropTree() // first child: tail joins the parent's text
+    detachedClean(first)
+    assert(div.text == "ta")
+    assert(linkedTags(div) == List("b", "u"))
+    val last = div.lastChild
+    last.dropTree() // last child: tail joins the previous sibling's tail
+    detachedClean(last)
+    assert(div.firstChild.tail == "bc")
+    assert(linkedTags(div) == List("b"))
+    div.firstChild.dropTree()
+    assert(div.text == "tabc")
+    assert(linkedTags(div) == Nil)
+    val p = doc.findFirst("p")
+    val only = p.firstChild
+    only.dropTree() // only child, parent without text
+    detachedClean(only)
+    assert(p.text == "d")
+    assert(linkedTags(p) == Nil)
+    assert(Serializer.serialize(doc.findFirst("body")) ==
+      "<body><div>tabc</div><p>d</p></body>")
+  }
+
+  test("removeUnlikelyCandidates: dropping a div with children skips its following siblings") {
+    val doc = HtmlParser.parse("<body><div>" +
+      "<div class=\"comment\"><p>inside</p><div class=\"sidebar\">nested</div></div>" +
+      "<div class=\"footer\">after</div><p>kept</p></div></body>")
+    val comment = doc.findAll("div")(1)
+    graft.extract.Extractor.removeUnlikelyCandidates(doc)
+    val outer = doc.findFirst("body").firstChild
+    // the dropped div's subtree is walked (its nested unlikely div goes too),
+    // then the pass ends: the following unlikely footer is not visited
+    detachedClean(comment)
+    assert(linkedTags(comment) == List("p"))
+    assert(linkedTags(outer) == List("div", "p"))
+    assert(outer.firstChild.attr("class") == "footer")
+    assert(doc.findAll("div").map(_.attr("class")).toList == List(null, "footer"))
   }
 
   test("serialize round-trip stability") {

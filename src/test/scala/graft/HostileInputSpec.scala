@@ -1,0 +1,104 @@
+package graft
+
+import graft.extract.{Extractor, Summary}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Hostile page shapes through the whole kernel (`Extractor.extract`).
+  *
+  * Each shape runs at n and 2n elements: one warm-up each, then three timed
+  * pairs (n, then 2n, back to back) in thread CPU time. The bound is
+  * min-of-3 time(2n) / time(n) <= 2.5 over the pairs. A ratio holds on any
+  * machine: a linear kernel doubles, one whose steps cost O(siblings) or
+  * O(attributes) quadruples. Each n is sized so that such a kernel spends
+  * well over 100 ms at n. For the sibling shapes it also puts n and 2n in
+  * one memory regime: both DOMs outgrow a core's L2 cache and both articles
+  * pass 2 MB, G1's humongous-object size at the test heap. Smaller pages
+  * straddle those steps, and the ratio then measures the step.
+  * Every output is also checked: not failed, with the expected leading text.
+  *
+  * Deep nesting is pinned as it stands: the kernel's walks recurse, so deep
+  * nesting overflows the stack and fails soft with `failed = true`. 10 k
+  * nested divs sit at the edge (they overflow while the walkers run
+  * interpreted and pass once they are compiled), so the pin uses 50 k,
+  * which overflows either way.
+  */
+class HostileInputSpec extends AnyFunSuite {
+
+  private def line(i: Int): String = s"lorem ipsum dolor sit amet $i"
+
+  private def page(body: String): String =
+    s"<html><head><title>hostile</title></head><body>$body</body></html>"
+
+  private def brSoup(n: Int): String =
+    page("<div>" + (0 until n).map(i => line(i) + "<br><br>").mkString + "</div>")
+
+  private def flatParagraphs(n: Int): String =
+    page("<div>" + (0 until n).map(i => s"<p>${line(i)}</p>").mkString + "</div>")
+
+  private def wideSiblings(n: Int): String =
+    page("<div>" + (0 until n).map(i => s"<div><span>${line(i)}</span></div>").mkString +
+      "</div>")
+
+  private def manyAttributes(n: Int): String =
+    page("<div " + (0 until n).map(i => s"""data-a$i="v$i"""").mkString(" ") + ">" +
+      s"<p>${(0 until 8).map(line).mkString(", ")}</p>" +
+      s"<p>${(8 until 16).map(line).mkString(", ")}</p></div>")
+
+  private val MaxRatio = 2.5
+
+  private def check(html: String, leading: String): Summary = {
+    val s = Extractor.extract(html)
+    assert(!s.failed)
+    assert(s.text.startsWith(leading), s.text.take(120))
+    s
+  }
+
+  private val threads = java.lang.management.ManagementFactory.getThreadMXBean
+
+  /** CPU time of this thread for one extraction. Collector threads do the
+    * garbage collection; their pauses, and their cost that grows with the
+    * live DOM in a young heap, are not the kernel's steps. */
+  private def timedMs(html: String): Double = {
+    val t0 = threads.getCurrentThreadCpuTime
+    Extractor.extract(html)
+    (threads.getCurrentThreadCpuTime - t0) / 1e6
+  }
+
+  private def linear(shape: Int => String, n: Int, leading: String): Unit = {
+    val (small, large) = (shape(n), shape(2 * n))
+    check(small, leading) // the warm-up runs
+    check(large, leading)
+    // each pair runs back to back, so a burst of load from other tenants of
+    // the machine hits both sizes of a pair alike
+    val runs = (1 to 3).map { _ => val t = timedMs(small); (t, timedMs(large)) }
+    val ratios = runs.map { case (tSmall, tLarge) => tLarge / tSmall }
+    info(runs.map { case (a, b) => f"$a%.1f/$b%.1f ms" }.mkString(s"n=$n, 2n: ", ", ", "") +
+      f"; ratios ${ratios.map(r => f"$r%.2f").mkString(" ")}")
+    assert(ratios.min <= MaxRatio, f"min time(2n)/time(n) = ${ratios.min}%.2f > $MaxRatio")
+  }
+
+  private val lines01 = s"${line(0)} ${line(1)}"
+
+  test("br-soup: doubling the <br><br> runs at most ~doubles the time") {
+    linear(brSoup, 60000, lines01)
+  }
+
+  test("flat paragraphs: doubling the <p> siblings at most ~doubles the time") {
+    linear(flatParagraphs, 60000, lines01)
+  }
+
+  test("wide siblings: doubling the <div> siblings at most ~doubles the time") {
+    linear(wideSiblings, 60000, lines01)
+  }
+
+  test("many attributes: doubling one tag's attributes at most ~doubles the time") {
+    linear(manyAttributes, 40000, s"${line(0)}, ${line(1)}")
+  }
+
+  test("deep nesting: 50 k nested divs fail soft") {
+    val html = page("<div>" * 50000 + s"<p>${line(0)}</p>" + "</div>" * 50000)
+    val s = Extractor.extract(html)
+    assert(s.failed)
+    assert(s.html == null && s.text.isEmpty)
+  }
+}
