@@ -13,8 +13,9 @@ import scala.collection.mutable
   * holds `parent`, `prevSibling` and `nextSibling`. The child list is private
   * to this class: [[append]], [[insertBefore]], [[detach]] and [[dropTree]]
   * are its only writers, and each is O(1), as is every sibling step, so a
-  * walk or an edit never scans a sibling list for a position. Walkers loop
-  * `firstChild … nextSibling`; [[children]] is a snapshot built per call.
+  * walk or an edit never scans a sibling list for a position. Every subtree
+  * walk steps a [[cursor]] over those links, so none needs a stack however
+  * deep the tree nests; [[children]] is a snapshot built per call.
   *
   * [[detach]] clears the node's own `parent` and sibling links, so a detached
   * subtree is closed: a depth-first step that climbs out of it finds no
@@ -148,53 +149,38 @@ final class Node(var tag: String) {
     }
   }
 
+  /** A stackless depth-first walk of this node's subtree: see [[Node.Cursor]]. */
+  def cursor: Node.Cursor = new Node.Cursor(this)
+
   /** Descendant elements with the given tag, document order — lxml
     * `findall('.//tag')` (self excluded). */
   def findAll(tagName: String): mutable.ArrayBuffer[Node] = {
     val out = new mutable.ArrayBuffer[Node]
-    def walk(n: Node): Unit = {
-      var c = n._first
-      while (c != null) {
-        if (c.tag == tagName) out += c
-        walk(c)
-        c = c._next
-      }
-    }
-    walk(this)
+    val w = cursor
+    w.next()
+    while (w.next()) if (w.entering && w.node.tag == tagName) out += w.node
     out
   }
 
   /** First descendant with the tag, document order (lxml `find('.//t')`). */
   def findFirst(tagName: String): Node = {
-    var found: Node = null
-    def walk(n: Node): Boolean = {
-      var c = n._first
-      while (c != null) {
-        if (c.tag == tagName) { found = c; return true }
-        if (walk(c)) return true
-        c = c._next
-      }
-      false
-    }
-    walk(this)
-    found
+    val w = cursor
+    w.next()
+    while (w.next()) if (w.entering && w.node.tag == tagName) return w.node
+    null
   }
 
   /** XPath `string()` — concatenation of all descendant text nodes: own
-    * `text`, then recursively each child's content and `tail`. Comments/PIs
-    * contribute only their tails. */
+    * `text`, then each child's content and `tail`, in document order.
+    * Comments/PIs contribute only their tails. */
   def textContent: String = {
     val sb = new java.lang.StringBuilder
-    def walk(n: Node): Unit = {
-      if (n.isElement && n.text != null) sb.append(n.text)
-      var c = n._first
-      while (c != null) {
-        walk(c)
-        if (c.tail != null) sb.append(c.tail)
-        c = c._next
-      }
+    val w = cursor
+    while (w.next()) {
+      val n = w.node
+      if (w.entering) { if (n.isElement && n.text != null) sb.append(n.text) }
+      else if ((n ne this) && n.tail != null) sb.append(n.tail)
     }
-    walk(this)
     sb.toString
   }
 
@@ -208,4 +194,40 @@ final class Node(var tag: String) {
 object Node {
   val Comment = "#comment"
   val Pi = "#pi"
+
+  /** A stackless pre/post-order walk of `top`'s subtree over the parent and
+    * sibling links, as libxml2 walks its trees. The caller steps it in its
+    * own loop, `while (w.next())`, reading [[node]] and [[entering]]. Each
+    * node is entered, its children are walked, then it is left, from
+    * enter(top) to leave(top): `top`'s tail and siblings are never visited.
+    * A node's `text` goes with its enter event, its `tail` with its leave.
+    * The caller must not edit the tree during the walk. */
+  final class Cursor private[Node] (top: Node) {
+    private var cur: Node = null
+    private var enter = false // with cur == null: the walk has ended
+    private var skip = false
+
+    def node: Node = cur
+    def entering: Boolean = enter
+    /** On an enter event: the next event is this node's leave. */
+    def skipChildren(): Unit = skip = true
+
+    /** Steps to the next event; false once leave(top) is passed. */
+    def next(): Boolean = {
+      val n = cur
+      if (n == null) {
+        if (enter) return false
+        cur = top; enter = true
+      } else if (enter) {
+        if (!skip && n._first != null) cur = n._first else enter = false
+        skip = false
+      } else if (n eq top) {
+        cur = null; enter = true
+        return false
+      } else if (n._next != null) {
+        cur = n._next; enter = true
+      } else cur = n._parent
+      true
+    }
+  }
 }

@@ -33,35 +33,37 @@ object Serializer {
     * Extractor.childrenMatchBlockRegex's serialize-equivalence. */
   def isRawText(tag: String): Boolean = rawText.contains(tag)
 
-  private def write(n: Node, sb: java.lang.StringBuilder, includeTail: Boolean): Unit = {
-    if (n.isComment) {
-      sb.append("<!--").append(if (n.text == null) "" else n.text).append("-->")
-    } else if (n.isPi) {
-      sb.append("<?").append(if (n.text == null) "" else n.text).append("?>")
-    } else {
-      sb.append('<').append(n.tag)
-      if (n.hasAttrs) {
-        n.attrs.foreach { case (k, v) =>
-          sb.append(' ').append(k).append("=\"")
-          escapeAttr(v, sb)
-          sb.append('"')
+  private def write(top: Node, sb: java.lang.StringBuilder, includeTail: Boolean): Unit = {
+    val w = top.cursor
+    while (w.next()) {
+      val n = w.node
+      if (w.entering) {
+        if (!n.isElement) {
+          sb.append(if (n.isComment) "<!--" else "<?")
+            .append(if (n.text == null) "" else n.text).append(if (n.isComment) "-->" else "?>")
+          w.skipChildren()
+        } else {
+          sb.append('<').append(n.tag)
+          if (n.hasAttrs) {
+            n.attrs.foreach { case (k, v) =>
+              sb.append(' ').append(k).append("=\"")
+              escapeAttr(v, sb)
+              sb.append('"')
+            }
+          }
+          sb.append('>')
+          if (HtmlParser.voidElements.contains(n.tag)) w.skipChildren()
+          else if (n.text != null) {
+            if (rawText.contains(n.tag)) sb.append(n.text)
+            else escapeText(n.text, sb)
+          }
         }
-      }
-      sb.append('>')
-      if (!HtmlParser.voidElements.contains(n.tag)) {
-        if (n.text != null) {
-          if (rawText.contains(n.tag)) sb.append(n.text)
-          else escapeText(n.text, sb)
-        }
-        var c = n.firstChild
-        while (c != null) {
-          write(c, sb, includeTail = true)
-          c = c.nextSibling
-        }
-        sb.append("</").append(n.tag).append('>')
+      } else {
+        if (n.isElement && !HtmlParser.voidElements.contains(n.tag))
+          sb.append("</").append(n.tag).append('>')
+        if ((includeTail || (n ne top)) && n.tail != null) escapeText(n.tail, sb)
       }
     }
-    if (includeTail && n.tail != null) escapeText(n.tail, sb)
   }
 
   private def escapeText(s: String, sb: java.lang.StringBuilder): Unit = {

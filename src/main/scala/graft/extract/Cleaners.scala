@@ -17,22 +17,21 @@ object Cleaners {
   private val killTags = Set("script", "style", "link")
 
   /** In-place P1 clean. Dropped nodes keep their tails (lxml Cleaner uses
-    * drop_tree-style removal via `el.drop_tree()`). */
+    * drop_tree-style removal via `el.drop_tree()`). The doomed nodes are
+    * collected in document order, their subtrees unvisited, then dropped in
+    * that order, so each tail joins where a drop during the walk would
+    * join it. */
   def cleanHtml(root: Node): Unit = {
-    def walk(n: Node): Unit = {
-      var c = n.firstChild
-      while (c != null) {
-        val next = c.nextSibling // dropTree clears c's links
-        if (c.isComment || c.isPi || killTags.contains(c.tag)) c.dropTree()
-        else {
-          cleanNodeAttrs(c)
-          walk(c)
-        }
-        c = next
-      }
+    val doomed = new scala.collection.mutable.ArrayBuffer[Node]
+    val w = root.cursor
+    while (w.next()) if (w.entering) {
+      val c = w.node
+      if ((c ne root) && (c.isComment || c.isPi || killTags.contains(c.tag))) {
+        doomed += c
+        w.skipChildren()
+      } else cleanNodeAttrs(c)
     }
-    cleanNodeAttrs(root)
-    walk(root)
+    doomed.foreach(_.dropTree())
   }
 
   private def cleanNodeAttrs(n: Node): Unit = {
@@ -167,16 +166,12 @@ object Cleaners {
   /** Streaming `len(clean(node.text_content()))` (readability.py:44-45). */
   def cleanLength(n: Node): Int = {
     val c = new CleanLengthCounter
-    def walk(x: Node): Unit = {
-      if (x.isElement && x.text != null) c.accept(x.text)
-      var ch = x.firstChild
-      while (ch != null) {
-        walk(ch)
-        if (ch.tail != null) c.accept(ch.tail)
-        ch = ch.nextSibling
-      }
+    val w = n.cursor
+    while (w.next()) {
+      val x = w.node
+      if (w.entering) { if (x.isElement) c.accept(x.text) }
+      else if (x ne n) c.accept(x.tail)
     }
-    walk(n)
     c.result
   }
 
@@ -185,20 +180,16 @@ object Cleaners {
     * readability.py:480). */
   def countCommas(n: Node, cap: Int = Int.MaxValue): Int = {
     var count = 0
-    def countIn(s: String): Unit = {
+    def countIn(s: String): Unit = if (s != null) {
       var i = 0
       while (count < cap && i < s.length) { if (s.charAt(i) == ',') count += 1; i += 1 }
     }
-    def walk(x: Node): Unit = {
-      if (x.isElement && x.text != null) countIn(x.text)
-      var ch = x.firstChild
-      while (count < cap && ch != null) {
-        walk(ch)
-        if (ch.tail != null) countIn(ch.tail)
-        ch = ch.nextSibling
-      }
+    val w = n.cursor
+    while (count < cap && w.next()) {
+      val x = w.node
+      if (w.entering) { if (x.isElement) countIn(x.text) }
+      else if (x ne n) countIn(x.tail)
     }
-    walk(n)
     count
   }
 }

@@ -2,6 +2,7 @@ package graft.extract
 
 import graft.dom.{HtmlParser, Node, Serializer}
 
+import scala.annotation.tailrec
 import scala.collection.mutable
 
 /** Extraction options — the live option keys of the reference
@@ -12,7 +13,8 @@ import scala.collection.mutable
   * False ⇒ gate off), but the golden fixture corpus was generated when the
   * 25-char gate was LIVE (slate-001's ranking requires it; the option-key
   * typo postdates the fixtures). The north rule targets fixture equality,
-  * so [[Extractor.scoreParagraphs]] keeps the gate at `minTextLength`.
+  * so [[Extractor.scoreParagraphs]] keeps the gate live at a fixed 25 chars;
+  * `minTextLength` feeds only [[Extractor.sanitize]]'s content-length test.
   */
 final case class ExtractOptions(
     minTextLength: Int = 25,
@@ -34,7 +36,7 @@ final case class Summary(
   * /root/reference/readability/readability.py as pure Scala over our DOM.
   * All quirks of the reference that shaped its golden fixtures are
   * replicated deliberately; each is cited. Stateless; safe to call from many
-  * threads (one call per transcript turn inside `mapPartitions`).
+  * threads (one call per transcript turn, in the `ExtractTurnsExec` operator).
   */
 object Extractor {
 
@@ -50,7 +52,6 @@ object Extractor {
       val doc = parse(html, opts.url)
       getArticle(doc, opts)
     } catch {
-      case _: StackOverflowError => Summary(0.0, null, "", Array.empty, failed = true)
       case scala.util.control.NonFatal(_) => Summary(0.0, null, "", Array.empty, failed = true)
     }
   }
@@ -92,12 +93,12 @@ object Extractor {
       val (text, spans) = extractTextAndSpans(articleDoc)
       Summary(page0.confidence, outHtml, text, spans, failed = false)
     } catch {
-      case _: StackOverflowError => Summary(0.0, null, "", Array.empty, failed = true)
       case scala.util.control.NonFatal(_) => Summary(0.0, null, "", Array.empty, failed = true)
     }
   }
 
   /** `append_next_page` (multi_page.py:367-401). */
+  @tailrec
   private def appendNextPage(parsedUrls: mutable.Set[String], pageIndex: Int,
       pageUrl: String, doc: Node, opts: ExtractOptions,
       fetch: String => Option[String], maxPages: Int): Unit = {
@@ -183,33 +184,27 @@ object Extractor {
       var i = 0
       while (i < active.length) { active(i).accept(s); i += 1 }
     }
-    def walk(n: Node): Unit = {
-      if (n.isElement && n.text != null) feed(n.text)
-      var c = n.firstChild
-      while (c != null) {
-        var isA = false
-        if (c.isElement) {
-          c.tag match {
+    val w = elem.cursor
+    while (w.next()) {
+      val n = w.node
+      if (w.entering) {
+        if (n.isElement) {
+          if (n ne elem) n.tag match {
             case "p" => nP += 1
             case "img" => nImg += 1
             case "li" => nLi += 1
-            case "a" => nA += 1; isA = true
+            case "a" => nA += 1; active += new Cleaners.CleanLengthCounter
             case "embed" => nEmbed += 1
             case "input" => nInput += 1
             case _ =>
           }
+          feed(n.text)
         }
-        if (isA) active += new Cleaners.CleanLengthCounter
-        walk(c)
-        if (isA) {
-          val cnt = active.remove(active.length - 1)
-          linkLen += cnt.result
-        }
-        if (c.tail != null) feed(c.tail)
-        c = c.nextSibling
+      } else if (n ne elem) {
+        if (n.tag == "a") linkLen += active.remove(active.length - 1).result
+        feed(n.tail)
       }
     }
-    walk(elem)
     SubtreeStats(root.result, linkLen, nP, nImg, nLi, nA, nEmbed, nInput)
   }
 
@@ -405,24 +400,22 @@ object Extractor {
     * pattern to exactly those fragments. Equivalence is property-tested
     * against the serialize-based oracle (TransformSpec). */
   private def childrenMatchBlockRegex(elem: Node): Boolean = {
-    def matches(n: Node): Boolean = {
-      if (n.isComment || n.isPi)
-        n.text != null && Regexes.search(Regexes.divToPElements, n.text)
-      else {
+    val w = elem.cursor
+    w.next()
+    while (w.next()) if (w.entering) {
+      val n = w.node
+      if (!n.isElement) {
+        if (n.text != null && Regexes.search(Regexes.divToPElements, n.text)) return true
+        w.skipChildren()
+      } else {
         val tagHit = tagBlockish.computeIfAbsent(n.tag,
           t => Regexes.search(Regexes.divToPElements, "<" + t))
-        tagHit == java.lang.Boolean.TRUE ||
+        if (tagHit == java.lang.Boolean.TRUE ||
           (Serializer.isRawText(n.tag) && n.text != null &&
-            Regexes.search(Regexes.divToPElements, n.text)) ||
-          anyChildMatches(n)
+            Regexes.search(Regexes.divToPElements, n.text))) return true
       }
     }
-    def anyChildMatches(n: Node): Boolean = {
-      var c = n.firstChild
-      while (c != null && !matches(c)) c = c.nextSibling
-      c != null
-    }
-    anyChildMatches(elem)
+    false
   }
 
   // ---------- A3/A4: score_paragraphs ----------
@@ -743,29 +736,23 @@ object Extractor {
         i += 1
       }
     }
-    def walk(n: Node): Unit = {
-      if (!n.isElement) return
-      val isBlock = !inlineTags.contains(n.tag)
-      if (isBlock) boundary()
-      if (n.text != null) add(n.text)
-      var c = n.firstChild
-      while (c != null) {
-        walk(c)
-        if (c.tail != null) add(c.tail)
-        c = c.nextSibling
-      }
-      if (isBlock) boundary()
-    }
     val spans = new mutable.ArrayBuffer[(Int, Int)]
-    if (article.isElement && article.text != null) add(article.text)
-    var c = article.firstChild
-    while (c != null) {
-      val start0 = sb.length + (if (pendingSpace) 1 else 0)
-      walk(c)
-      val end = sb.length
-      if (end > start0) spans += ((start0, end))
-      if (c.tail != null) add(c.tail)
-      c = c.nextSibling
+    var start0 = 0
+    val w = article.cursor
+    while (w.next()) {
+      val n = w.node
+      val top = n.parent eq article
+      if (w.entering) {
+        if (top) start0 = sb.length + (if (pendingSpace) 1 else 0)
+        if (n.isElement) {
+          if ((n ne article) && !inlineTags.contains(n.tag)) boundary()
+          add(n.text)
+        } else if (n ne article) w.skipChildren()
+      } else if (n ne article) {
+        if (n.isElement && !inlineTags.contains(n.tag)) boundary()
+        if (top && sb.length > start0) spans += ((start0, sb.length))
+        add(n.tail)
+      }
     }
     (sb.toString, spans.toArray)
   }

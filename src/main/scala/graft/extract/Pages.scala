@@ -208,24 +208,17 @@ object Pages {
 
   // ---- duplicate suppression (multi_page.py:346-365) ----
 
-  def firstParagraph(elem: Node): Node = {
-    // xpath './/p' — descendants only? lxml `.//p` excludes self; but the
-    // reference calls it on the page div whose tag is never p.
-    val ps = elem.findAll("p")
-    if (ps.nonEmpty) ps(0) else null
-  }
-
   /** `is_suspected_duplicate` (multi_page.py:353-365): first-`<p>` text of
     * the new page vs each existing `article-page` div. */
   def isSuspectedDuplicate(doc: Node, pageDoc: Node): Boolean = {
-    val pageP = firstParagraph(pageDoc)
+    val pageP = pageDoc.findFirst("p") // xpath `.//p`, self excluded
     if (pageP == null) return false
     val pages = doc.iterSubtree.filter { n =>
       n.isElement && n.attrOr("class", "").contains(PageClass)
     }.toVector
     val pagePContent = pageP.textContent
     pages.exists { existing =>
-      val p = firstParagraph(existing)
+      val p = existing.findFirst("p")
       p != null && p.textContent == pagePContent
     }
   }

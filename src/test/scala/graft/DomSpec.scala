@@ -1,6 +1,7 @@
 package graft
 
 import graft.dom.{Entities, HtmlParser, Node, Serializer}
+import graft.extract.Cleaners
 import org.scalatest.funsuite.AnyFunSuite
 
 class DomSpec extends AnyFunSuite {
@@ -219,5 +220,81 @@ class DomSpec extends AnyFunSuite {
     assert(frag.tag == "div")
     assert(frag.attr("id") == "page")
     assert(frag.findFirst("p").text == "hello")
+  }
+
+  private def el(tag: String, text: String, tail: String, kids: Node*): Node = {
+    val n = new Node(tag)
+    n.text = text
+    n.tail = tail
+    kids.foreach(n.append)
+    n
+  }
+
+  /** The cursor's events over `top` as "+tag" / "-tag", skipping the
+    * children of every node tagged `skipAt`; fails unless each leave closes
+    * the latest node entered and not yet left. */
+  private def events(top: Node, skipAt: String = null): List[String] = {
+    val out = List.newBuilder[String]
+    var open = List.empty[Node]
+    val w = top.cursor
+    while (w.next()) {
+      val n = w.node
+      if (w.entering) {
+        open = n :: open
+        if (n.tag == skipAt) w.skipChildren()
+      } else {
+        assert(open.headOption.exists(_ eq n), s"leave $n out of order")
+        open = open.tail
+      }
+      out += (if (w.entering) "+" else "-") + n.tag
+    }
+    assert(open.isEmpty)
+    assert(!w.next()) // an ended walk stays ended
+    out.result()
+  }
+
+  test("cursor: enter/leave order, skipChildren, and the walk stays inside its top") {
+    val br = el("br", null, "brt", el("span", "s", "st")) // a void element given a child by hand
+    val top = el("div", "t", "top-tail",
+      el("b", "b", "bt", el("i", "i", "it")), el(Node.Comment, "c", "ct"), br)
+    el("body", "o", null, el("p", "before", "pt"), top, el("p", "after", "at"))
+    val all = List("+div", "+b", "+i", "-i", "-b", "+#comment", "-#comment",
+      "+br", "+span", "-span", "-br", "-div")
+    assert(events(top) == all)
+    assert(events(top, skipAt = "br") == all.filterNot(_.endsWith("span")))
+    assert(events(top, skipAt = "i") == all) // a leaf has no children to skip
+    assert(events(top, skipAt = "b") == all.filterNot(_.endsWith("i")))
+    assert(events(top, skipAt = "div") == List("+div", "-div"))
+    assert(events(br) == List("+br", "+span", "-span", "-br"))
+    // text on enter, tail on leave; the top's tail and siblings stay out
+    assert(top.textContent == "tbiitbtctsstbrt")
+    assert(br.textContent == "sst")
+    assert(Serializer.serialize(top) == "<div>t<b>b<i>i</i>it</b>bt<!--c-->ct<br>brt</div>")
+    assert(top.findAll("p").isEmpty && top.findFirst("p") == null)
+    assert(top.findAll("span").map(_.text).toList == List("s"))
+  }
+
+  /** The recursive text walk the cursor replaced: own `text`, then each
+    * child's pieces and `tail`; comments and PIs give only their tails. */
+  private def textPieces(n: Node): List[String] =
+    (if (n.isElement && n.text != null) List(n.text) else Nil) ++
+      n.children.flatMap(c => textPieces(c) ++ Option(c.tail))
+
+  test("cursor text walks equal the recursive reference on every node of 500 fuzzed DOMs") {
+    (0 until 500).foreach { seed =>
+      // commas in the text pieces (and in class values, which must not count)
+      val html = DivToPEquivalenceSpec.gen(seed).replace("words", "wo,rds, ").replace("match", "ma,tch")
+      HtmlParser.parse(html).iterSubtree.foreach { n =>
+        val pieces = textPieces(n)
+        val text = pieces.mkString
+        val counter = new Cleaners.CleanLengthCounter
+        pieces.foreach(counter.accept)
+        val commas = text.count(_ == ',')
+        assert(n.textContent == text, s"seed $seed, $n")
+        assert(Cleaners.cleanLength(n) == counter.result, s"seed $seed, $n")
+        assert(Cleaners.countCommas(n) == commas, s"seed $seed, $n")
+        assert(Cleaners.countCommas(n, cap = 2) == math.min(commas, 2), s"seed $seed, $n")
+      }
+    }
   }
 }

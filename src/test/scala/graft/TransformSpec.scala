@@ -41,7 +41,26 @@ class TransformSpec extends AnyFunSuite {
 class DivToPEquivalenceSpec extends AnyFunSuite {
   import graft.extract.Regexes
 
-  private def gen(seed: Int): String = {
+  test("tree-walk block test == serialize+regex oracle on 500 fuzzed DOMs") {
+    (0 until 500).foreach { seed =>
+      val html = DivToPEquivalenceSpec.gen(seed)
+      val viaTree = HtmlParser.parse(html)
+      Extractor.transformMisusedDivs(viaTree)
+      val viaOracle = HtmlParser.parse(html)
+      viaOracle.findAll("div").foreach { elem =>
+        if (!Regexes.search(Regexes.divToPElements, Serializer.serializeChildren(elem)))
+          elem.tag = "p"
+      }
+      assert(Serializer.serialize(viaTree) == Serializer.serialize(viaOracle),
+        s"seed $seed diverged:\n$html")
+    }
+  }
+}
+
+object DivToPEquivalenceSpec {
+  /** A seeded tag soup over block, inline, a-/p-prefixed and raw-text tags,
+    * with comments and markup-like text. */
+  def gen(seed: Int): String = {
     val rnd = new scala.util.Random(seed)
     val tags = Vector("div", "span", "em", "li", "article", "abbr",
       "address", "aside", "table", "ul", "ol", "dl", "img", "p", "pre",
@@ -72,20 +91,5 @@ class DivToPEquivalenceSpec extends AnyFunSuite {
     emit(0)
     sb.append("</div></body></html>")
     sb.toString
-  }
-
-  test("tree-walk block test == serialize+regex oracle on 500 fuzzed DOMs") {
-    (0 until 500).foreach { seed =>
-      val html = gen(seed)
-      val viaTree = HtmlParser.parse(html)
-      Extractor.transformMisusedDivs(viaTree)
-      val viaOracle = HtmlParser.parse(html)
-      viaOracle.findAll("div").foreach { elem =>
-        if (!Regexes.search(Regexes.divToPElements, Serializer.serializeChildren(elem)))
-          elem.tag = "p"
-      }
-      assert(Serializer.serialize(viaTree) == Serializer.serialize(viaOracle),
-        s"seed $seed diverged:\n$html")
-    }
   }
 }
