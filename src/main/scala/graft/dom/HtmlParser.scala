@@ -1,6 +1,7 @@
 package graft.dom
 
 import scala.collection.mutable
+import scala.runtime.IntRef
 
 /** From-scratch error-tolerant HTML tokenizer + tree builder.
   *
@@ -63,10 +64,36 @@ object HtmlParser {
     private var head: Node = null
     private var body: Node = null
     private var inBody = false
-    // open-element stack; root is stack bottom once created
+    // open-element stack; root is stack bottom once created. Every push and
+    // pop goes through push/popTo, which keep a count of the open elements
+    // per tag name (each entry's count rides along in `stackCounts`, so a
+    // pop needs no lookup): an end tag whose name has no open element skips
+    // the stack scan, so stray end tags cost O(1) however deep the page nests.
     private val stack = new mutable.ArrayBuffer[Node](16)
+    private val stackCounts = new mutable.ArrayBuffer[IntRef](16)
+    private val openCount = new java.util.HashMap[String, IntRef]
 
     private def cur: Node = stack(stack.length - 1)
+
+    private def push(n: Node): Unit = {
+      var c = openCount.get(n.tag)
+      if (c == null) { c = new IntRef(0); openCount.put(n.tag, c) }
+      c.elem += 1
+      stack += n
+      stackCounts += c
+    }
+
+    /** Pops open elements until `depth` remain. */
+    private def popTo(depth: Int): Unit =
+      while (stack.length > depth) {
+        stack.remove(stack.length - 1)
+        stackCounts.remove(stackCounts.length - 1).elem -= 1
+      }
+
+    private def isOpen(name: String): Boolean = {
+      val c = openCount.get(name)
+      c != null && c.elem > 0
+    }
 
     def run(): Node = {
       while (pos < len) {
@@ -222,7 +249,7 @@ object HtmlParser {
         if (text.nonEmpty) owner.text =
           (if (owner.text == null) "" else owner.text) + text
         // close the raw element
-        if (stack.length > 1) stack.remove(stack.length - 1)
+        if (stack.length > 1) popTo(stack.length - 1)
       }
       // skip past the close tag
       if (end >= len) pos = len
@@ -240,7 +267,7 @@ object HtmlParser {
     private def ensureRoot(): Unit = {
       if (root == null) {
         root = new Node("html")
-        stack += root
+        push(root)
       }
     }
 
@@ -262,9 +289,9 @@ object HtmlParser {
       if (!inBody) {
         inBody = true
         // reset stack to html > body
-        stack.clear()
-        stack += root
-        stack += body
+        popTo(0)
+        push(root)
+        push(body)
       }
     }
 
@@ -346,7 +373,7 @@ object HtmlParser {
 
     private def runAutoClose(newTag: String): Unit = {
       while (stack.length > 1 && autoClosedBy(newTag, cur.tag))
-        stack.remove(stack.length - 1)
+        popTo(stack.length - 1)
     }
 
     private def startTag(name: String, attrs: mutable.LinkedHashMap[String, String]): Unit = {
@@ -376,7 +403,7 @@ object HtmlParser {
         head.append(n)
         // pushed, it is `cur` for the caller's raw-text consumption
         // (script/style/title)
-        if (!voidElements.contains(name)) stack += n
+        if (!voidElements.contains(name)) push(n)
         return
       }
 
@@ -386,7 +413,7 @@ object HtmlParser {
 
       val n = mkNode(name, attrs)
       cur.append(n)
-      if (!voidElements.contains(name)) stack += n
+      if (!voidElements.contains(name)) push(n)
     }
 
     private def mkNode(name: String, attrs: mutable.LinkedHashMap[String, String]): Node = {
@@ -403,14 +430,12 @@ object HtmlParser {
           return // '</br>' ignored (libxml2 drops it)
         case _ =>
       }
+      if (!isOpen(name)) return // no open element to close: ignored
       if (!inBody) {
         // closing a head-only element
         var i = stack.length - 1
         while (i >= 1) {
-          if (stack(i).tag == name) {
-            while (stack.length > i) stack.remove(stack.length - 1)
-            return
-          }
+          if (stack(i).tag == name) { popTo(i); return }
           i -= 1
         }
         return
@@ -422,7 +447,7 @@ object HtmlParser {
         if (t.tag == name) {
           if (t eq body) return
           if (t eq root) return
-          while (stack.length > i) stack.remove(stack.length - 1)
+          popTo(i)
           return
         }
         i -= 1

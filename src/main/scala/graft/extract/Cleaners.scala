@@ -110,26 +110,48 @@ object Cleaners {
     * `clean`'s semantics: an ASCII-whitespace run containing '\n' → one
     * unit; each maximal [ \t] subrun → one unit; \r \f \x0B pass through;
     * unicode-stripped at both ends. Property-tested equal to
-    * `clean(textContent).length`. */
+    * `clean(textContent).length`.
+    *
+    * It keeps a running total, [[units]], that ignores the stripping: one
+    * unit per char outside an ASCII-whitespace run and the run's units when
+    * the run closes, i.e. when the next char outside it arrives. A
+    * whitespace run between two non-space chars is then counted whole, so
+    * the clean length of any stretch of the stream is `units` after its
+    * last non-space char minus `units` before its first. The result is that
+    * difference for the whole stream; `Extractor.scoreParagraphs` takes it
+    * for every element of a subtree from one walk. */
   final class CleanLengthCounter {
-    private var length = 0
-    private var trailingWs = 0
-    private var leadingDone = false
+    private var total = 0
+    private var end = 0
+    private var start = -1
     // pending ASCII-ws run state
     private var runUnits = 0
     private var runHasNl = false
     private var inTabSpace = false
 
-    @inline private def isAsciiWs(c: Char): Boolean =
-      c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' || c == '\u000B'
+    /** The running total of units so far. */
+    def units: Int = total
+    /** [[units]] just after the last non-space char (0 before the first). */
+    def lastEnd: Int = end
 
-    private def flushRun(): Unit = {
-      if (runUnits > 0 || runHasNl) {
-        val k = if (runHasNl) 1 else runUnits
-        if (leadingDone) { length += k; trailingWs += k }
-        runUnits = 0
-        runHasNl = false
-        inTabSpace = false
+    /** Feeds one char; true when it is a non-space char, which is then the
+      * last one and ends at [[units]]. */
+    @inline def step(c: Char): Boolean = {
+      if (c == ' ' || c == '\t') {
+        if (!inTabSpace) { runUnits += 1; inTabSpace = true }
+        false
+      } else if (c == '\n') {
+        runHasNl = true; inTabSpace = false
+        false
+      } else if (c == '\r' || c == '\f' || c == '\u000B') { // pass through individually
+        runUnits += 1; inTabSpace = false
+        false
+      } else {
+        total += (if (runHasNl) 1 else runUnits) // close the run
+        runUnits = 0; runHasNl = false; inTabSpace = false
+        total += 1
+        if (pyIsSpace(c)) false // unicode whitespace: kept by clean, stripped at ends
+        else { end = total; true }
       }
     }
 
@@ -137,30 +159,12 @@ object Cleaners {
       if (s == null) return
       var i = 0
       while (i < s.length) {
-        val c = s.charAt(i)
-        if (isAsciiWs(c)) {
-          if (c == '\n') { runHasNl = true; inTabSpace = false }
-          else if (c == ' ' || c == '\t') {
-            if (!inTabSpace) { runUnits += 1; inTabSpace = true }
-          } else { // \r \f \x0B pass through individually
-            runUnits += 1
-            inTabSpace = false
-          }
-        } else {
-          flushRun()
-          if (pyIsSpace(c)) { // unicode whitespace: kept by clean, stripped at ends
-            if (leadingDone) { length += 1; trailingWs += 1 }
-          } else {
-            leadingDone = true
-            length += 1
-            trailingWs = 0
-          }
-        }
+        if (step(s.charAt(i)) && start < 0) start = total - 1
         i += 1
       }
     }
 
-    def result: Int = length - trailingWs // pending ws run never counts at EOF
+    def result: Int = if (start < 0) 0 else end - start
   }
 
   /** Streaming `len(clean(node.text_content()))` (readability.py:44-45). */

@@ -138,19 +138,18 @@ object Extractor {
 
   /** `class_weight` (readability.py:47-63). */
   def classWeight(e: Node): Int = {
+    if (!e.hasAttrs) return 0
     var weight = 0
     val cls = e.attr("class")
-    if (cls != null && cls.nonEmpty) {
-      if (Regexes.search(Regexes.negative, cls)) weight -= 25
-      if (Regexes.search(Regexes.positive, cls)) weight += 25
-    }
+    if (cls != null && cls.nonEmpty) weight += keywordWeight(Regexes.foldAscii(cls))
     val id = e.attr("id")
-    if (id != null && id.nonEmpty) {
-      if (Regexes.search(Regexes.negative, id)) weight -= 25
-      if (Regexes.search(Regexes.positive, id)) weight += 25
-    }
+    if (id != null && id.nonEmpty) weight += keywordWeight(Regexes.foldAscii(id))
     weight
   }
+
+  private def keywordWeight(folded: String): Int =
+    (if (Regexes.negative.foundInFolded(folded)) -25 else 0) +
+      (if (Regexes.positive.foundInFolded(folded)) 25 else 0)
 
   /** `score_node` tag prior + class weight (readability.py:65-79). */
   def scoreNode(elem: Node): Double = {
@@ -170,7 +169,9 @@ object Extractor {
     * nested anchors counted repeatedly — exactly
     * `sum(text_length(a) for a in findall('.//a'))`), and descendant tag
     * counts for sanitize. One walk replaces the reference's ~9 subtree
-    * traversals per judged node. */
+    * traversals per judged node. Its callers are sanitize's conditional
+    * clean and [[linkDensity]]; [[scoreParagraphs]] reads the same numbers
+    * for every element from one [[TextStats]] walk instead. */
   final case class SubtreeStats(textLen: Int, linkLen: Int,
       p: Int, img: Int, li: Int, a: Int, embed: Int, input: Int)
 
@@ -208,7 +209,9 @@ object Extractor {
     SubtreeStats(root.result, linkLen, nP, nImg, nLi, nA, nEmbed, nInput)
   }
 
-  /** `get_link_density` (readability.py:381-388) — single pass. */
+  /** `get_link_density` (readability.py:381-388) — single pass. Called
+    * by [[getRawArticle]]'s `<p>` rescue and sanitize's header test, once
+    * per judged node; [[scoreParagraphs]] uses its [[TextStats]] table. */
   def linkDensity(elem: Node): Double = {
     val s = subtreeStats(elem)
     s.linkLen.toDouble / math.max(s.textLen, 1)
@@ -225,10 +228,12 @@ object Extractor {
     * This quirk shaped the golden fixtures and is preserved. */
   def removeUnlikelyCandidates(doc: Node): Unit =
     doc.iterSubtree.foreach { current =>
-      if (current.isElement) {
-        val s = current.attrOr("class", "") + " " + current.attrOr("id", "")
-        if (Regexes.search(Regexes.unlikelyCandidates, s) &&
-          !Regexes.search(Regexes.okMaybeItsACandidate, s) &&
+      // no keyword holds a space, so an element without attributes (" ")
+      // matches nothing
+      if (current.isElement && current.hasAttrs) {
+        val s = Regexes.foldAscii(current.attrOr("class", "") + " " + current.attrOr("id", ""))
+        if (Regexes.unlikelyCandidates.foundInFolded(s) &&
+          !Regexes.okMaybeItsACandidate.foundInFolded(s) &&
           current.tag != "body" &&
           current.parent != null) {
           current.dropTree()
@@ -420,48 +425,151 @@ object Extractor {
 
   // ---------- A3/A4: score_paragraphs ----------
 
+  /** Text statistics of every node under `top`, from one cursor walk, for
+    * one [[scoreParagraphs]] call; it describes the tree as it was when
+    * built. Node `i` is the `i`-th entered (`top` is 0): `nodes(i)`, its
+    * parent's index `parent(i)` (-1 for `top`), and, exactly as the per-node
+    * functions compute them, `cleanLen(i)` = `Cleaners.cleanLength`,
+    * `commas(i)` = `Cleaners.countCommas` and `linkLen(i)` =
+    * `subtreeStats(_).linkLen`. `p`, `pre` and `td` list the descendants
+    * with those tags in document order, as `findAll` does.
+    *
+    *   - Clean length: the walk feeds the text pieces, in `textContent`
+    *     order, through one [[Cleaners.CleanLengthCounter]]. A node's value
+    *     is the counter's units after its last non-space char minus its
+    *     units before its first. The open nodes still waiting for their
+    *     first non-space char are the innermost ones entered since the last
+    *     such char, so each gets its start once, on a climb from the
+    *     innermost open node.
+    *   - Commas: the running comma count at leave minus that at enter.
+    *   - Link length: summed bottom-up on leave events, each child's total
+    *     plus, for an `<a>` child, its clean length, so nested anchors
+    *     count repeatedly, as in `subtreeStats`.
+    */
+  private[graft] final class TextStats(top: Node) {
+    var size = 0
+    var nodes = new Array[Node](256)
+    var parent = new Array[Int](256)
+    var cleanLen = new Array[Int](256) // while open: units before its first non-space char
+    var commas = new Array[Int](256) // while open: the running count at enter
+    var linkLen = new Array[Int](256)
+    private val pB, preB, tdB = new mutable.ArrayBuilder.ofInt
+
+    private val counter = new Cleaners.CleanLengthCounter
+    private var nCommas = 0
+    private var cur = -1 // the innermost open node
+    private var mark = 0 // nodes from here on were entered after the last non-space char
+
+    private def feed(s: String): Unit = if (s != null) {
+      var k = 0
+      while (k < s.length) {
+        val c = s.charAt(k)
+        if (counter.step(c)) {
+          if (c == ',') nCommas += 1
+          var j = cur
+          while (j >= mark) { cleanLen(j) = counter.units - 1; j = parent(j) }
+          mark = size
+        }
+        k += 1
+      }
+    }
+
+    private def enter(n: Node): Int = {
+      val i = size
+      if (i == nodes.length) {
+        nodes = java.util.Arrays.copyOf(nodes, 2 * i)
+        parent = java.util.Arrays.copyOf(parent, 2 * i)
+        cleanLen = java.util.Arrays.copyOf(cleanLen, 2 * i)
+        commas = java.util.Arrays.copyOf(commas, 2 * i)
+        linkLen = java.util.Arrays.copyOf(linkLen, 2 * i)
+      }
+      size += 1
+      nodes(i) = n
+      parent(i) = cur
+      commas(i) = nCommas
+      cur = i
+      i
+    }
+
+    private val w = top.cursor
+    while (w.next()) {
+      val n = w.node
+      if (w.entering) {
+        val i = enter(n)
+        if (n.isElement) {
+          if (n ne top) n.tag match {
+            case "p" => pB += i
+            case "pre" => preB += i
+            case "td" => tdB += i
+            case _ =>
+          }
+          feed(n.text)
+        }
+      } else {
+        val i = cur
+        cur = parent(i)
+        cleanLen(i) = if (i >= mark) 0 else counter.lastEnd - cleanLen(i)
+        commas(i) = nCommas - commas(i)
+        if (n ne top) {
+          linkLen(cur) += linkLen(i) + (if (n.tag == "a") cleanLen(i) else 0)
+          feed(n.tail)
+        }
+      }
+    }
+
+    val p: Array[Int] = pB.result()
+    val pre: Array[Int] = preB.result()
+    val td: Array[Int] = tdB.result()
+
+    def linkDensity(i: Int): Double = linkLen(i).toDouble / math.max(cleanLen(i), 1)
+  }
+
   /** `score_paragraphs` (readability.py:390-437). The per-paragraph length
     * gate is OFF (see ExtractOptions note); the length bonus uses Py2 floor
     * division (`inner_text_len / 100`, readability.py:419). Candidates are
     * keyed by node identity; insertion order is retained for the
-    * link-density scaling pass and for deterministic tie-breaks. */
+    * link-density scaling pass and for deterministic tie-breaks. Every
+    * length, comma count and link density comes from one [[TextStats]]
+    * walk, so scoring is linear in the page however deep it nests. */
   def scoreParagraphs(doc: Node): mutable.LinkedHashMap[Node, Double] = {
     val candidates = mutable.LinkedHashMap.empty[Node, Double]
-    val contributing = new mutable.ArrayBuffer[Node]
+    val stats = new TextStats(doc)
+    // table indices; -1 is `doc.parent`, the one candidate outside the table
+    val contributing = new mutable.ArrayBuffer[Int]
 
-    for (tag <- Seq("p", "pre", "td"); elem <- doc.findAll(tag)) {
-      val parentNode = elem.parent
-      if (parentNode != null) {
-        val grandParent = parentNode.parent
-        val innerTextLen = Cleaners.cleanLength(elem)
-        // 25-char paragraph gate (readability.py:405-407). The CURRENT
-        // reference reads the never-set 'min_text_len' option (Py2
-        // `len < None` is False ⇒ gate off), but the golden corpus was
-        // generated with the gate LIVE (slate-001: short byline <p>s must
-        // not score, else div.slb-post-creds outranks the article) — the
-        // option-key typo postdates the fixtures. We follow the fixtures.
-        if (innerTextLen >= 25) {
+    for (list <- Seq(stats.p, stats.pre, stats.td); i <- list) {
+      val parentIx = stats.parent(i)
+      val parentNode = stats.nodes(parentIx)
+      val grandIx = stats.parent(parentIx)
+      val grandParent = if (grandIx >= 0) stats.nodes(grandIx) else doc.parent
+      val innerTextLen = stats.cleanLen(i)
+      // 25-char paragraph gate (readability.py:405-407). The CURRENT
+      // reference reads the never-set 'min_text_len' option (Py2
+      // `len < None` is False ⇒ gate off), but the golden corpus was
+      // generated with the gate LIVE (slate-001: short byline <p>s must
+      // not score, else div.slb-post-creds outranks the article) — the
+      // option-key typo postdates the fixtures. We follow the fixtures.
+      if (innerTextLen >= 25) {
         if (!candidates.contains(parentNode)) {
           candidates(parentNode) = scoreNode(parentNode)
-          contributing += parentNode
+          contributing += parentIx
         }
         if (grandParent != null && !candidates.contains(grandParent)) {
           candidates(grandParent) = scoreNode(grandParent)
-          contributing += grandParent
+          contributing += grandIx
         }
         var contentScore = 1.0
-        // commas survive clean() unchanged: count them streaming on the tree
-        contentScore += Cleaners.countCommas(elem) + 1 // len(split(','))
+        contentScore += stats.commas(i) + 1 // len(split(','))
         contentScore += math.min(innerTextLen / 100, 3) // Py2 floor div
         candidates(parentNode) = candidates(parentNode) + contentScore
         if (grandParent != null)
           candidates(grandParent) = candidates(grandParent) + contentScore / 2.0
-        }
       }
     }
     // link-density scaling over the `ordered` list (readability.py:428-435)
-    contributing.foreach { elem =>
-      val ld = linkDensity(elem)
+    contributing.foreach { i =>
+      val elem = if (i >= 0) stats.nodes(i) else doc.parent
+      val ld = if (i >= 0) stats.linkDensity(i) else linkDensity(elem)
       candidates(elem) = candidates(elem) * (1 - ld)
     }
     candidates

@@ -168,7 +168,7 @@ object Pages {
       if (!Regexes.search(Regexes.nextLink, candidate.linkText))
         candidate.score -= 65
     }
-    if (Regexes.search(Regexes.negative, linkData) ||
+    if (Regexes.negative.foundIn(linkData) ||
       Regexes.search(Regexes.extraneous, linkData)) candidate.score -= 50
     if (Regexes.search(Regexes.prevLink, linkData)) candidate.score -= 200
 
@@ -181,8 +181,8 @@ object Pages {
         positiveMatch = true
         candidate.score += 25
       }
-      if (!negativeMatch && Regexes.search(Regexes.negative, parentClassAndId) &&
-        !Regexes.search(Regexes.positive, parentClassAndId)) {
+      if (!negativeMatch && Regexes.negative.foundIn(parentClassAndId) &&
+        !Regexes.positive.foundIn(parentClassAndId)) {
         negativeMatch = true
         candidate.score -= 25
       }

@@ -16,6 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * straddle those steps, and the ratio then measures the step.
   * Every output is also checked: not failed, with the expected leading text.
   *
+  * Nested paragraphs put a scored `<p>` at every level of a div nest, so
+  * every level is a candidate whose text statistics span all deeper levels;
+  * stray end tags close nothing at the bottom of a deep nest.
+  *
   * Deep nesting runs the same protocol on a thread with a 512 KB stack. No
   * kernel walk recurses, so 50 k and 100 k nested divs extract there. A walk
   * that spent a stack frame per level would overflow that stack whether it
@@ -23,31 +27,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * JIT's state.
   */
 class HostileInputSpec extends AnyFunSuite {
-
-  private def line(i: Int): String = s"lorem ipsum dolor sit amet $i"
-
-  private def page(body: String): String =
-    s"<html><head><title>hostile</title></head><body>$body</body></html>"
-
-  private def brSoup(n: Int): String =
-    page("<div>" + (0 until n).map(i => line(i) + "<br><br>").mkString + "</div>")
-
-  private def flatParagraphs(n: Int): String =
-    page("<div>" + (0 until n).map(i => s"<p>${line(i)}</p>").mkString + "</div>")
-
-  private def wideSiblings(n: Int): String =
-    page("<div>" + (0 until n).map(i => s"<div><span>${line(i)}</span></div>").mkString +
-      "</div>")
-
-  private val eightLines = (0 until 8).map(line).mkString(", ")
-
-  private def manyAttributes(n: Int): String =
-    page("<div " + (0 until n).map(i => s"""data-a$i="v$i"""").mkString(" ") + ">" +
-      s"<p>$eightLines</p>" +
-      s"<p>${(8 until 16).map(line).mkString(", ")}</p></div>")
-
-  private def deepNesting(n: Int): String =
-    page("<div>" * n + s"<p>$eightLines</p>" + "</div>" * n)
+  import HostileInputSpec._
 
   private val MaxRatio = 2.5
 
@@ -100,6 +80,14 @@ class HostileInputSpec extends AnyFunSuite {
     linear(manyAttributes, 40000, s"${line(0)}, ${line(1)}")
   }
 
+  test("nested paragraphs: doubling 2 k div levels with a <p> each at most ~doubles the time") {
+    linear(nestedParagraphs, 2000, s"${line(0)}, ${line(1)}")
+  }
+
+  test("stray end tags: doubling 20 k unmatched end tags under 20 k divs at most ~doubles the time") {
+    linear(strayEndTags, 20000, s"${line(0)}, ${line(1)}")
+  }
+
   test("deep nesting: doubling 50 k nested divs at most ~doubles the time") {
     var failure: Throwable = null
     val body: Runnable = () =>
@@ -110,4 +98,41 @@ class HostileInputSpec extends AnyFunSuite {
     small.join()
     if (failure != null) throw failure
   }
+}
+
+/** The hostile page shapes, each a function of its size n. */
+object HostileInputSpec {
+  def line(i: Int): String = s"lorem ipsum dolor sit amet $i"
+
+  private def page(body: String): String =
+    s"<html><head><title>hostile</title></head><body>$body</body></html>"
+
+  def brSoup(n: Int): String =
+    page("<div>" + (0 until n).map(i => line(i) + "<br><br>").mkString + "</div>")
+
+  def flatParagraphs(n: Int): String =
+    page("<div>" + (0 until n).map(i => s"<p>${line(i)}</p>").mkString + "</div>")
+
+  def wideSiblings(n: Int): String =
+    page("<div>" + (0 until n).map(i => s"<div><span>${line(i)}</span></div>").mkString +
+      "</div>")
+
+  private val eightLines = (0 until 8).map(line).mkString(", ")
+
+  def manyAttributes(n: Int): String =
+    page("<div " + (0 until n).map(i => s"""data-a$i="v$i"""").mkString(" ") + ">" +
+      s"<p>$eightLines</p>" +
+      s"<p>${(8 until 16).map(line).mkString(", ")}</p></div>")
+
+  def deepNesting(n: Int): String =
+    page("<div>" * n + s"<p>$eightLines</p>" + "</div>" * n)
+
+  def nestedParagraphs(n: Int): String =
+    page(s"<div><p>$eightLines</p>" * n + "</div>" * n)
+
+  def strayEndTags(n: Int): String =
+    page("<div>" * n + s"<p>$eightLines</p>" + "</span>" * n + "</div>" * n)
+
+  val shapes: Seq[Int => String] = Seq(brSoup, flatParagraphs, wideSiblings,
+    manyAttributes, deepNesting, nestedParagraphs, strayEndTags)
 }
