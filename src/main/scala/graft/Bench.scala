@@ -57,25 +57,28 @@ object Bench {
     }
   }
 
+  /** The SparkEntry queries a comma-separated filter names (all of them
+    * for `None` or "all"); `Left` lists the names that are not queries. */
+  def queryNames(csv: Option[String]): Either[String, Seq[String]] = {
+    val known = SparkEntry.queries.keySet
+    val ns = csv.filter(_ != "all")
+      .fold(known.toSeq.sorted)(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val unknown = ns.filterNot(known)
+    if (unknown.nonEmpty) Left(s"unknown queries: ${unknown.mkString(",")}")
+    else Right(ns)
+  }
+
   /** Command line plus the numeric environment knobs; `Left` is the
     * reason the call is malformed. Starts no Spark session. */
   def parse(args: Seq[String], env: Map[String, String]): Either[String, Config] = {
     def positive(key: String, default: Int): Either[String, Int] = env.get(key)
       .fold[Either[String, Int]](Right(default))(v =>
         v.toIntOption.filter(_ > 0).toRight(s"$key must be a positive integer, got '$v'"))
-    def names(csv: Option[String]): Either[String, Seq[String]] = {
-      val known = SparkEntry.queries.keySet
-      val ns = csv.filter(_ != "all")
-        .fold(known.toSeq.sorted)(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      val unknown = ns.filterNot(known)
-      if (unknown.nonEmpty) Left(s"unknown queries: ${unknown.mkString(",")}")
-      else Right(ns)
-    }
     val mode: Either[String, Mode] = args match {
       case Seq() => Right(Driver)
-      case "queries" +: csv if csv.size <= 1 => names(csv.headOption).map(Queries)
-      case "jobs" +: csv if csv.size <= 1 => names(csv.headOption).map(Jobs)
-      case Seq("plan", outDir, csv) => names(Some(csv)).map(Plan(outDir, _))
+      case "queries" +: csv if csv.size <= 1 => queryNames(csv.headOption).map(Queries)
+      case "jobs" +: csv if csv.size <= 1 => queryNames(csv.headOption).map(Jobs)
+      case Seq("plan", outDir, csv) => queryNames(Some(csv)).map(Plan(outDir, _))
       case Seq("scaling", face @ ("extract" | "skew" | "curation")) => Right(Scaling(face))
       case _ => Left(s"unrecognised arguments: ${args.mkString(" ")}")
     }

@@ -31,24 +31,39 @@ object SparkEntry {
   // ruthless pass never falls into the lenient retry (SURVEY.md §2j).
   private val MinChars = 250
 
+  /** DuckDB SQL for what extraction returns from `TranscriptGen.htmlWrap`
+    * of a `documents` row: the heading plus the whitespace-normalized text. */
+  private val wrappedTextSql = "'Heading ' || CAST(doc_id AS VARCHAR) || ' ' || " +
+    "trim(regexp_replace(text, '\\s+', ' ', 'g'))"
+
+  /** The roundtrip oracle: (doc_id, extracted_text) of every wrapped
+    * document — shared by every face that extracts the roundtrip table. */
+  private val roundtripOracle = "SELECT CAST(doc_id AS BIGINT) AS doc_id, " +
+    s"$wrappedTextSql AS extracted_text FROM documents WHERE n_chars >= $MinChars"
+
+  /** The roundtrip transcript table through the extraction operator. */
+  private def roundtripExtracted(s: SparkSession, dir: String): DataFrame =
+    GraftOps.extractTurns(TranscriptGen.roundtripTurns(s, dir, MinChars).toDF())
+
+  /** (doc_id, extracted_text) of every wrapped document. */
+  private val roundtrip: (SparkSession, String) => DataFrame = (s, dir) =>
+    roundtripExtracted(s, dir)
+      .selectExpr("CAST(turn_idx AS BIGINT) AS doc_id", "extracted_text")
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- extraction engine (S1-S4, P1-P12, A1-A6, W1-W2, 2i, 2j) ----
-    "extract_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      TranscriptGen.roundtripTurns(s, dir, MinChars)
-        .map(t => (t.turn_idx.toLong, ExtractJob.extractTurn(t, ExtractOptions()).extracted_text))
-        .toDF("doc_id", "extracted_text")
-    }),
+    "extract_roundtrip" -> roundtrip,
     "extract_flagship" -> ((s, dir) => {
       ExtractJob.run(s, TranscriptGen.turns(s, dir, turnsPerDoc = 2), numBuckets = 32)
         .extracted.toDF()
         .select("conv_id", "turn_idx", "confidence", "extracted_text", "failed")
     }),
     "extract_spans" -> ((s, dir) => {
+      // spans are UTF-16 offsets: slice with String.substring, not SQL
+      // substring, which counts code points
       import s.implicits._
-      TranscriptGen.roundtripTurns(s, dir, MinChars)
-        .flatMap { t =>
-          val r = ExtractJob.extractTurn(t, ExtractOptions())
+      roundtripExtracted(s, dir).as[ExtractedTurn]
+        .flatMap { r =>
           r.spans.zipWithIndex.map { case (sp, i) =>
             (r.conv_id, r.turn_idx, i, sp.start, sp.end,
               r.extracted_text.substring(sp.start, sp.end))
@@ -57,9 +72,7 @@ object SparkEntry {
     }),
     "extract_confidence_hist" -> ((s, dir) => {
       // A3/A4/W1 evidence: the score distribution of winning candidates
-      import s.implicits._
-      TranscriptGen.roundtripTurns(s, dir, MinChars)
-        .map(t => ExtractJob.extractTurn(t, ExtractOptions()))
+      roundtripExtracted(s, dir)
         .groupBy(floor(col("confidence") / 10).cast("long").as("confidence_decile"))
         .agg(count(lit(1)).as("cnt"))
     }),
@@ -87,12 +100,9 @@ object SparkEntry {
           |       extract_readable(text).text AS extracted_text
           |FROM graft_turns""".stripMargin)
     }),
-    "extract_plan_surface" -> ((s, dir) => {
-      // the custom LogicalPlan + Strategy face: ExtractTurnsNode planned
-      // to ExtractTurnsExec (EXPLAIN-visible whole-operator extraction)
-      GraftOps.extractTurns(TranscriptGen.roundtripTurns(s, dir, MinChars).toDF())
-        .selectExpr("CAST(turn_idx AS BIGINT) AS doc_id", "extracted_text")
-    }),
+    // the custom LogicalPlan + Strategy face: ExtractTurnsNode planned
+    // to ExtractTurnsExec (EXPLAIN-visible whole-operator extraction)
+    "extract_plan_surface" -> roundtrip,
     "extract_multipage" -> ((s, dir) => {
       // 2k/J3/W4 end-to-end: page 1 links to page 2 through an in-memory
       // fetcher; combined text = page1 + page2 (oracle below). A third
@@ -120,15 +130,15 @@ object SparkEntry {
       // tail sentence (→ one deleted block), %3==2 benchmark misses the
       // last word (→ one inserted block).
       import s.implicits._
+      ExtractReadable.register(s)
       TableIO.rebalanceSmall(TableIO(s, dir).read("documents")
         .select("doc_id", "text", "n_chars")
         .where(col("n_chars") >= MinChars).as[(Long, String, Long)])
-        .map { case (docId, text, _) =>
-          val actual = ExtractJob.extractTurn(
-            Turn(TranscriptGen.convOf(docId), docId.toInt, "assistant",
-              TranscriptGen.htmlWrap(docId, text), "",
-              new java.sql.Timestamp(TranscriptGen.FixedEpochMs)),
-            ExtractOptions()).extracted_text
+        .map { case (docId, text, _) => (docId, text, TranscriptGen.htmlWrap(docId, text)) }
+        .toDF("doc_id", "text", "page")
+        .selectExpr("doc_id", "text", "extract_readable(page).text AS actual")
+        .as[(Long, String, String)]
+        .map { case (docId, text, actual) =>
           val base = s"Heading $docId " + text
           val expected = (docId % 3) match {
             case 0 => base
@@ -416,19 +426,20 @@ object SparkEntry {
     "decontaminate_bloom" -> ((s, dir) => Quality.decontaminateBloom(s, dir)),
     "curate_pipeline" -> ((s, dir) => {
       // end-to-end curation: extraction → quality gate → per-domain
-      // quota, with extraction and the signal kernel FUSED into one
-      // row-local map — nothing shuffles until the two-phase (skew-safe)
-      // quota windows, the pipeline's only exchanges at any corpus size
+      // quota; extraction (one extract_readable per row) and the signal
+      // kernel are row-local — nothing shuffles until the two-phase
+      // (skew-safe) quota windows, the only exchanges at any corpus size
       import s.implicits._
+      ExtractReadable.register(s)
       val rows = TableIO.rebalanceSmall(TableIO(s, dir).read("documents")
         .select("doc_id", "text", "n_chars", "source")
         .where(col("n_chars") >= MinChars)
         .as[(Long, String, Long, String)])
-        .map { case (id, text, _, src) =>
-          val turn = Turn(TranscriptGen.convOf(id), id.toInt, "assistant",
-            TranscriptGen.htmlWrap(id, text), "",
-            new java.sql.Timestamp(TranscriptGen.FixedEpochMs))
-          val et = ExtractJob.extractTurn(turn, ExtractOptions()).extracted_text
+        .map { case (id, text, _, src) => (id, src, TranscriptGen.htmlWrap(id, text)) }
+        .toDF("doc_id", "source", "page")
+        .selectExpr("doc_id", "source", "extract_readable(page).text AS et")
+        .as[(Long, String, String)]
+        .map { case (id, src, et) =>
           val sig = Quality.computeSignals(id, et)
           (id, src, Hash61.mix(id), sig.n_words, sig.keep)
         }.toDF("doc_id", "source", "rank_key", "n_words", "keep")
@@ -665,8 +676,8 @@ object SparkEntry {
     // shares corpus_kl_drift's oracle
     "streaming_drift" -> ((s, dir) => StreamingDrift.replay(s, dir)),
     // the extraction stage itself as a stream: roundtrip transcripts
-    // replayed through real file-source micro-batches and the stateless
-    // extractStream map — shares extract_roundtrip's oracle verbatim,
+    // replayed through real file-source micro-batches and the
+    // ExtractTurns operator — shares extract_roundtrip's oracle verbatim,
     // so the driver gate pins streaming == batch for the flagship
     // operator end-to-end
     "streaming_extract" -> ((s, dir) => StreamingExtract.replay(s, dir, MinChars)),
@@ -983,25 +994,11 @@ object SparkEntry {
     // TranscriptGen.htmlWrap is boilerplate + the document text; a correct
     // readability extraction returns exactly the heading + the
     // whitespace-normalized document text.
-    "extract_roundtrip" ->
-      ("SELECT CAST(doc_id AS BIGINT) AS doc_id, " +
-        "'Heading ' || CAST(doc_id AS VARCHAR) || ' ' || " +
-        "trim(regexp_replace(text, '\\s+', ' ', 'g')) AS extracted_text " +
-        s"FROM documents WHERE n_chars >= $MinChars"),
-    "extract_sql_surface" ->
-      ("SELECT CAST(doc_id AS BIGINT) AS doc_id, " +
-        "'Heading ' || CAST(doc_id AS VARCHAR) || ' ' || " +
-        "trim(regexp_replace(text, '\\s+', ' ', 'g')) AS extracted_text " +
-        s"FROM documents WHERE n_chars >= $MinChars"),
-    "extract_plan_surface" ->
-      ("SELECT CAST(doc_id AS BIGINT) AS doc_id, " +
-        "'Heading ' || CAST(doc_id AS VARCHAR) || ' ' || " +
-        "trim(regexp_replace(text, '\\s+', ' ', 'g')) AS extracted_text " +
-        s"FROM documents WHERE n_chars >= $MinChars"),
+    "extract_roundtrip" -> roundtripOracle,
+    "extract_sql_surface" -> roundtripOracle,
+    "extract_plan_surface" -> roundtripOracle,
     "extract_multipage" ->
-      ("SELECT CAST(doc_id AS BIGINT) AS doc_id, " +
-        "'Heading ' || CAST(doc_id AS VARCHAR) || ' ' || " +
-        "trim(regexp_replace(text, '\\s+', ' ', 'g')) || " +
+      (s"SELECT CAST(doc_id AS BIGINT) AS doc_id, $wrappedTextSql || " +
         "' Heading ' || CAST(doc_id AS VARCHAR) || " +
         "' appendix content for document ' || CAST(doc_id AS VARCHAR) || " +
         "' with enough plain words to pass both the paragraph length gate " +
@@ -1032,9 +1029,7 @@ object SparkEntry {
     // quality CTEs, keepers join back for source, the quota window uses
     // the same Hash61.mix rank.
     "curate_pipeline" -> {
-      val et = "'Heading ' || CAST(doc_id AS VARCHAR) || ' ' || " +
-        "trim(regexp_replace(text, '\\s+', ' ', 'g'))"
-      qualityCtes(et, s"WHERE n_chars >= $MinChars") +
+      qualityCtes(wrappedTextSql, s"WHERE n_chars >= $MinChars") +
         ", k AS (SELECT q.doc_id, d3.source, q.n_words FROM q " +
         "JOIN documents d3 ON d3.doc_id = q.doc_id WHERE q.keep = 1), " +
         "rk AS (SELECT doc_id, source, n_words, row_number() OVER " +
@@ -1326,8 +1321,7 @@ object SparkEntry {
         "CAST(0 AS INTEGER) AS \"start\", " +
         "CAST(length(et) AS INTEGER) AS \"end\", " +
         "et AS block_text FROM (" +
-        "SELECT doc_id, 'Heading ' || CAST(doc_id AS VARCHAR) || ' ' || " +
-        "trim(regexp_replace(text, '\\s+', ' ', 'g')) AS et " +
+        s"SELECT doc_id, $wrappedTextSql AS et " +
         s"FROM documents WHERE n_chars >= $MinChars)"),
     // W2 sibling merge, all four branches: the article is exactly four
     // top-level blocks (long-p lead / best candidate / threshold-merged
@@ -1523,11 +1517,7 @@ object SparkEntry {
     "source_overlap" -> graft.spark.TextAnalysis.sourceOverlapSql(),
     "streaming_drift" -> graft.spark.Curation.klDriftSql(),
     // stateless stream == batch: the roundtrip oracle, verbatim
-    "streaming_extract" ->
-      ("SELECT CAST(doc_id AS BIGINT) AS doc_id, " +
-        "'Heading ' || CAST(doc_id AS VARCHAR) || ' ' || " +
-        "trim(regexp_replace(text, '\\s+', ' ', 'g')) AS extracted_text " +
-        s"FROM documents WHERE n_chars >= $MinChars"),
+    "streaming_extract" -> roundtripOracle,
     "q_range_join" -> graft.spark.Temporal.rangeJoinSql(),
     )
   }

@@ -4,12 +4,20 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  val Usage = "usage: Verify <sfDir> <outDir> [csv|all]"
+
+  /** (sfDir, outDir, query names); the optional query-name filter is a
+    * dev-loop convenience, the driver passes two arguments and runs all.
+    * `Left` is the reason the call is malformed. Starts no Spark session. */
+  def parse(args: Seq[String]): Either[String, (String, String, Seq[String])] = args match {
+    case Seq(sfDir, outDir, csv @ _*) if csv.size <= 1 =>
+      Bench.queryNames(csv.headOption).map((sfDir, outDir, _))
+    case _ => Left(s"expected 2 or 3 arguments, got ${args.size}")
+  }
+
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (dev-loop
-    // convenience; the driver passes exactly two args and runs all)
-    val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val (sfDir, outDir, names) = parse(args.toSeq).fold(
+      err => { System.err.println(s"Verify: $err\n$Usage"); sys.exit(2) }, identity)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -19,15 +27,14 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    val queries = SparkEntry.queries
+    names.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+    }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
     spark.stop()
   }

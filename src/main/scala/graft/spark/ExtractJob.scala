@@ -1,6 +1,5 @@
 package graft.spark
 
-import graft.extract.{ExtractOptions, Extractor}
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
@@ -61,14 +60,6 @@ object ExtractJob {
   /** Number of salt values for long conversations: a conversation spreads
     * over at most `salt` buckets, each still sorted by turn_idx within. */
   def saltFor(numBuckets: Int): Int = math.max(1, numBuckets / 8)
-
-  /** The typed per-row face: streaming, per-row queries, and the
-    * reference the operator is tested against. */
-  def extractTurn(t: Turn, opts: ExtractOptions): ExtractedTurn = {
-    val s = Extractor.extract(t.text, opts)
-    ExtractedTurn(t.conv_id, t.turn_idx, s.confidence,
-      s.html, s.text, s.spans.map { case (a, b) => Span(a, b) }, s.failed)
-  }
 
   /** Stable data-level bucket of a turn — the resume/lineage unit. Must be
     * a pure function of the ROW (not of Spark partition indexes), so a

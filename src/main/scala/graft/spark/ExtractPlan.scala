@@ -17,8 +17,8 @@ import scala.collection.mutable
   * `SparkStrategy` + physical `UnaryExecNode`, registered through
   * [[GraftExtensions]] (`injectPlannerStrategy`). Both [[ExtractJob]]
   * faces and [[GraftOps.extractTurns]] plan to it; `extract_readable`
-  * shares its row encoder ([[ExtractReadable.toRow]]); the typed
-  * [[ExtractJob.extractTurn]] is the reference both are tested against.
+  * shares its row encoder ([[ExtractReadable.toRow]]); both are tested
+  * against `Extractor.extract` itself.
   *
   * The logical node requires child columns `conv_id:string`,
   * `turn_idx:int`, `text:string` (and `bucket:int` with a [[LineageTap]];

@@ -1,5 +1,6 @@
 package graft
 
+import graft.extract.{ExtractOptions, Extractor}
 import graft.spark.{ExtractJob, TranscriptGen, Turn}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.PlanTestUtil.{exchangeInputColumns, finalPlan, readSchemaColumns}
@@ -55,6 +56,18 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.contains("Exchange hashpartitioning") &&
       !plan.contains("Exchange rangepartitioning"),
       "per-turn extraction must not shuffle by key\n" + plan)
+  }
+
+  test("roundtrip-table extraction plans to the operator; page-table queries call extract_readable once") {
+    Seq("extract_roundtrip", "extract_spans", "extract_confidence_hist").foreach { q =>
+      val plan = finalPlan(SparkEntry.queries(q)(spark, sfDir))
+      assert(plan.contains("ExtractTurns ") && !plan.contains("!ExtractTurns"), s"$q\n" + plan)
+    }
+    Seq("drift_insdel", "curate_pipeline").foreach { q =>
+      val plan = finalPlan(SparkEntry.queries(q)(spark, sfDir))
+      assert("extract_readable\\(".r.findAllIn(plan).size == 1,
+        s"$q must extract once per row\n" + plan)
+    }
   }
 
   test("top-customers: broadcast join, map-side partial agg, top-k without global sort") {
@@ -152,11 +165,10 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.contains("Exchange"), "custom operator must not introduce a shuffle\n" + plan)
     val viaPlan = df.select("conv_id", "turn_idx", "extracted_text")
       .as[(String, Int, String)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val viaTyped = turns.map { t =>
-      val r = ExtractJob.extractTurn(t, graft.extract.ExtractOptions())
-      (r.conv_id, r.turn_idx, r.extracted_text)
+    val viaKernel = turns.map { t =>
+      (t.conv_id, t.turn_idx, Extractor.extract(t.text, ExtractOptions()).text)
     }.sortBy(r => (r._1, r._2))
-    assert(viaPlan == viaTyped)
+    assert(viaPlan == viaKernel)
     // spans survive the InternalRow round-trip
     val spans = df.selectExpr("size(spans)").as[Int].collect()
     assert(spans.forall(_ > 0))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.extract.{ExtractOptions, Extractor}
 import graft.spark.{ExtractJob, TranscriptGen}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -134,8 +135,8 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tmp = java.nio.file.Files.createTempDirectory("graft-nulltext").toString
     input.toDS().write.mode("overwrite").parquet(s"$tmp/turns")
     val turns = spark.read.parquet(s"$tmp/turns").as[graft.spark.Turn]
-    // the typed reference: the parser rejects null and the row fails soft
-    assert(ExtractJob.extractTurn(input.head, graft.extract.ExtractOptions()).failed)
+    // the kernel reference: the parser rejects null and the row fails soft
+    assert(Extractor.extract(input.head.text, ExtractOptions()).failed)
 
     val res = ExtractJob.run(spark, turns, numBuckets = 2)
     val job = res.extracted.collect().map(r => r.turn_idx -> r.failed).toMap
@@ -150,6 +151,26 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sql = turns.toDF().selectExpr("turn_idx", "extract_readable(text) AS r")
       .collect().map(r => r.getInt(0) -> r.isNullAt(1)).toMap
     assert(sql == Map(0 -> true, 1 -> false))
+  }
+
+  test("extract_spans with a supplementary character: every row equals the kernel's UTF-16 slice") {
+    val s = spark
+    import s.implicits._
+    // U+1F600 is one code point but two UTF-16 units; spans count units
+    val text = ("a grinning \uD83D\uDE00 face inside a paragraph of plain words " * 5).trim
+    assert(text.length >= 250)
+    val dir = java.nio.file.Files.createTempDirectory("graft-nonbmp").toString
+    Seq((7L, text, text.length.toLong)).toDF("doc_id", "text", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("extract_spans")(spark, dir)
+      .select("turn_idx", "block_idx", "start", "end", "block_text")
+      .as[(Int, Int, Int, Int, String)].collect().sortBy(_._2).toSeq
+    val r = Extractor.extract(TranscriptGen.htmlWrap(7L, text), ExtractOptions())
+    assert(r.text.codePointCount(0, r.text.length) < r.text.length)
+    val want = r.spans.toSeq.zipWithIndex.map { case ((start, end), i) =>
+      (7, i, start, end, r.text.substring(start, end))
+    }
+    assert(want.nonEmpty && got == want)
   }
 
   test("resume ledger: second run processes nothing new") {

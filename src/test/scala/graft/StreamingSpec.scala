@@ -1,6 +1,7 @@
 package graft
 
-import graft.spark.{ExtractJob, StreamingExtract, TranscriptGen, Turn}
+import graft.extract.{ExtractOptions, Extractor}
+import graft.spark.{StreamingExtract, TranscriptGen, Turn}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.BeforeAndAfterAll
@@ -47,11 +48,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getString(0), r.getInt(1),
         Option(r.getString(2)).getOrElse(""), r.getDouble(3))).sortBy(x => (x._1, x._2))
 
-    val opts = graft.extract.ExtractOptions()
-    val batch = turns.map(t => ExtractJob.extractTurn(t, opts))
-      .map(r => (r.conv_id, r.turn_idx,
-        Option(r.extracted_text).getOrElse(""), r.confidence))
-      .sortBy(x => (x._1, x._2)).toArray
+    val batch = turns.map { t =>
+      val r = Extractor.extract(t.text, ExtractOptions())
+      (t.conv_id, t.turn_idx, Option(r.text).getOrElse(""), r.confidence)
+    }.sortBy(x => (x._1, x._2)).toArray
 
     assert(streamed.toSeq == batch.toSeq)
   }
@@ -202,10 +202,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val minChars = 250
     val got = StreamingExtract.replay(s, sfDir, minChars)
       .as[(Long, String)].collect().sortBy(_._1).toSeq
-    val opts = graft.extract.ExtractOptions()
     val want = TranscriptGen.roundtripTurns(s, sfDir, minChars)
-      .map(t => (t.turn_idx.toLong,
-        ExtractJob.extractTurn(t, opts).extracted_text))
+      .map(t => (t.turn_idx.toLong, Extractor.extract(t.text, ExtractOptions()).text))
       .collect().sortBy(_._1).toSeq
     assert(got.nonEmpty && got == want)
   }

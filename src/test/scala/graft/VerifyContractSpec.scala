@@ -28,6 +28,27 @@ class VerifyContractSpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
   }
 
+  test("bad arguments are rejected before any Spark session starts") {
+    assert(Verify.parse(Seq("sf")).isLeft)
+    assert(Verify.parse(Seq("sf", "out", "titles", "extra")).isLeft)
+    assert(Verify.parse(Seq("sf", "out", "titles,no_such_query")) ==
+      Left("unknown queries: no_such_query"))
+    assert(Verify.parse(Seq("sf", "out", "titles,extract_spans")) ==
+      Right(("sf", "out", Seq("titles", "extract_spans"))))
+    // the driver's two-argument call runs every query
+    assert(Verify.parse(Seq("sf", "out")).map(_._3.toSet) == Right(SparkEntry.queries.keySet))
+    // main: usage on stderr, exit 2, no session (a fresh JVM, small heap)
+    val javaBin = s"${sys.props("java.home")}/bin/java"
+    Seq(Seq("sf"), Seq("sf", "out", "no_such_query")).foreach { args =>
+      val p = new ProcessBuilder((Seq(javaBin, "-Xmx256m", "-cp", sys.props("java.class.path"),
+        "graft.Verify") ++ args): _*).redirectErrorStream(true).start()
+      val out = new String(p.getInputStream.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      assert(p.waitFor() == 2, out)
+      assert(out.startsWith("Verify: ") && out.contains(Verify.Usage), out)
+      assert(!out.contains("SparkContext"), out)
+    }
+  }
+
   test("escaping survives quotes, backslashes, and control characters") {
     val nasty = "a\"b\\c\nd\re\tfg"
     val parsed = parse(s"{${Verify.escapeJson("k")}: ${Verify.escapeJson(nasty)}}")
