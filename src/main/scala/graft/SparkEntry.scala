@@ -196,8 +196,6 @@ object SparkEntry {
       TranscriptGen.roundtripTurns(s, dir, MinChars).map { t =>
         val doc = Extractor.parse(t.text, null)
         val nodesParsed = doc.iterSubtree.count(_.isElement)
-        doc.findAll("script").foreach(_.dropTree())
-        doc.findAll("style").foreach(_.dropTree())
         Extractor.removeUnlikelyCandidates(doc)
         val afterUnlikely = doc.iterSubtree.count(_.isElement)
         val divsBefore = doc.findAll("div").length

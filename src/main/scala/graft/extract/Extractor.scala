@@ -132,10 +132,6 @@ object Extractor {
 
   // ---------- scalar helpers ----------
 
-  /** `text_length` (readability.py:44-45) — streaming, zero-allocation
-    * (hot path: called per node per decision). */
-  def textLength(n: Node): Int = Cleaners.cleanLength(n)
-
   /** `class_weight` (readability.py:47-63). */
   def classWeight(e: Node): Int = {
     if (!e.hasAttrs) return 0
@@ -243,131 +239,60 @@ object Extractor {
 
   // ---------- P5-P9: double-break and misused-div transforms ----------
 
-  /** A "part" is either a string or an element
-    * (readability.py:81-137). */
-  private type Part = Either[String, Node]
-
-  /** `split_into_parts` — destroys `.text` and child tails
-    * (readability.py:125-137). */
-  def splitIntoParts(elem: Node): mutable.ArrayBuffer[Part] = {
-    val parts = new mutable.ArrayBuffer[Part]
-    if (elem.text != null) { parts += Left(elem.text); elem.text = null }
-    var child = elem.firstChild
-    while (child != null) {
-      parts += Right(child)
-      if (child.tail != null) { parts += Left(child.tail); child.tail = null }
-      child = child.nextSibling
-    }
-    parts
-  }
-
-  /** `mark_if_whitespace` (readability.py:168-191). */
-  def markIfWhitespace(parts: collection.Seq[Part], left: Int, right: Int): Set[Int] = {
-    var onlyWs = true
-    var i = left + 1
-    while (onlyWs && i < right) {
-      parts(i) match {
-        case Left(s) => if (Cleaners.strip(s).nonEmpty) onlyWs = false
-        case Right(_) => onlyWs = false
-      }
-      i += 1
-    }
-    if (onlyWs) (left + 1 until right).toSet else Set.empty
-  }
-
-  /** `squeeze_breaks` (readability.py:193-225). */
-  def squeezeBreaks(parts: mutable.ArrayBuffer[Part]): mutable.ArrayBuffer[Part] = {
-    val breaks = parts.zipWithIndex.collect {
-      case (Right(n), i) if n.tag == "br" => i
-    }
-    var leftBreak = -1
-    val marked = mutable.Set.empty[Int]
-    breaks.foreach { b =>
-      if (leftBreak < 0) leftBreak = b
-      else {
-        marked ++= markIfWhitespace(parts, leftBreak, b)
-        leftBreak = b
-      }
-    }
-    val out = new mutable.ArrayBuffer[Part](parts.length)
-    parts.zipWithIndex.foreach { case (p, i) => if (!marked.contains(i)) out += p }
-    out
-  }
-
-  /** `make_paragraph_from_parts` (readability.py:145-166). Returns null when
-    * the paragraph would be empty (whitespace-only strings are then LOST —
-    * they were already detached by split_into_parts; fixture-relevant). */
-  def makeParagraphFromParts(parts: collection.Seq[Part]): Node = {
-    val p = new Node("p")
-    var lastElement: Node = null
-    parts.foreach {
-      case Left(s) =>
-        if (lastElement == null) p.text = (if (p.text == null) "" else p.text) + s
-        else lastElement.tail = (if (lastElement.tail == null) "" else lastElement.tail) + s
-      case Right(n) =>
-        p.append(n)
-        lastElement = n
-    }
-    if ((p.text == null || Cleaners.strip(p.text).isEmpty) && p.firstChild == null) null
-    else p
-  }
-
-  private def insertP(parent: Node, atElem: Node, parts: mutable.ArrayBuffer[Part]): Unit = {
-    val p = makeParagraphFromParts(parts)
-    if (p != null) parent.insertBefore(atElem, p)
-    parts.clear()
-  }
-
-  private def appendP(parent: Node, parts: mutable.ArrayBuffer[Part]): Unit = {
-    val p = makeParagraphFromParts(parts)
-    if (p != null) parent.append(p)
-    parts.clear()
-  }
-
   private val doubleBreakBlockTags: Set[String] =
     Set("h1", "h2", "h3", "h4", "h5", "h6", "blockquote", "div", "img", "p",
       "pre", "table")
 
   /** `transform_double_breaks_into_paragraphs_elem` — the 2-state FSM
-    * (readability.py:250-308). */
+    * (readability.py:250-308), run over `elem`'s child links in place of
+    * the reference's flat list of strings and children (`split_into_parts`,
+    * readability.py:125-137): `elem.text` and each child's `tail` are its
+    * string parts. The pending `<p>` is built as the FSM goes: a string part
+    * becomes its text or stays the tail of the child just appended to it,
+    * and an inline child moves into it. Before a block child, before a
+    * `<br><br>` pair (both dropped) and at the end, the `<p>` is inserted
+    * when it holds a child or non-blank text (`make_paragraph_from_parts`,
+    * readability.py:145-166; blank strings are then lost). A `<br>` held in
+    * the BR state and never followed stays where it is, before the last
+    * `<p>`. Two string parts are never adjacent, so `squeeze_breaks`
+    * (readability.py:193-225) reduces to dropping a blank tail between two
+    * sibling `<br>`s. */
   def transformDoubleBreaksElem(elem: Node): Unit = {
-    val START = 0; val BR = 1
-    var state = START
-    var firstBr: Node = null
-    val acc = new mutable.ArrayBuffer[Part]
-    val parts = squeezeBreaks(splitIntoParts(elem))
-    parts.foreach { part =>
-      if (state == START) {
-        part match {
-          case Left(s) => acc += Left(s)
-          case Right(n) =>
-            if (n.tag == "br") { firstBr = n; state = BR }
-            else if (doubleBreakBlockTags.contains(n.tag)) insertP(elem, n, acc)
-            else acc += Right(n)
-        }
-      } else { // BR
-        part match {
-          case Left(s) =>
-            acc += Right(firstBr)
-            acc += Left(s)
-          case Right(n) =>
-            if (n.tag == "br") {
-              firstBr.dropTree()
-              insertP(elem, n, acc)
-              n.dropTree()
-            } else if (doubleBreakBlockTags.contains(n.tag)) {
-              acc += Right(firstBr)
-              insertP(elem, n, acc)
-            } else {
-              acc += Right(firstBr)
-              acc += Right(n)
-            }
-        }
-        state = START
+    var p = new Node("p")
+    def flushBefore(at: Node): Unit =
+      if (p.firstChild != null || (p.text != null && Cleaners.strip(p.text).nonEmpty)) {
+        if (at == null) elem.append(p) else elem.insertBefore(at, p)
+        p = new Node("p")
+      } else p.text = null
+    p.text = elem.text
+    elem.text = null
+    var firstBr: Node = null // non-null in the BR state
+    var c = elem.firstChild
+    while (c != null) {
+      val next = c.nextSibling
+      val br = c.tag == "br"
+      if (br && next != null && next.tag == "br" && c.tail != null &&
+        Cleaners.strip(c.tail).isEmpty) c.tail = null
+      if (br && firstBr == null) {
+        // a tail ends the BR state at once: the <br> and its tail go in
+        if (c.tail == null) firstBr = c else p.append(c)
+      } else if (br) { // a <br><br> pair ends the paragraph; both breaks go
+        firstBr.detach()
+        flushBefore(c)
+        c.detach()
+        p.text = c.tail
         firstBr = null
+      } else {
+        if (firstBr != null) { p.append(firstBr); firstBr = null }
+        if (doubleBreakBlockTags.contains(c.tag)) {
+          flushBefore(c)
+          p.text = c.tail
+          c.tail = null
+        } else p.append(c)
       }
+      c = next
     }
-    appendP(elem, acc)
+    flushBefore(null)
   }
 
   /** `transform_double_breaks_into_paragraphs` (readability.py:310-359) —
@@ -675,7 +600,7 @@ object Extractor {
           var toRemove = false
           if (pCount > 0 && imgCount > pCount) toRemove = true
           else if (liCount > pCount && tag != "ul" && tag != "ol") toRemove = true
-          else if (inputCount > floorDiv(pCount, 3)) toRemove = true
+          else if (inputCount > Math.floorDiv(pCount, 3)) toRemove = true // Python 2 int `/`
           else if (contentLength < opts.minTextLength &&
             (imgCount == 0 || imgCount > 2)) toRemove = true
           else if (weight < 25 && ld > 0.2) toRemove = true
@@ -687,14 +612,14 @@ object Extractor {
             var followingLen = -1
             var sib = el.nextSibling
             while (followingLen < 0 && sib != null) {
-              val l = textLength(sib)
+              val l = Cleaners.cleanLength(sib)
               if (l > 0) followingLen = l
               sib = sib.nextSibling
             }
             var precedingLen = -1
             sib = el.prevSibling
             while (precedingLen < 0 && sib != null) {
-              val l = textLength(sib)
+              val l = Cleaners.cleanLength(sib)
               if (l > 0) precedingLen = l
               sib = sib.prevSibling
             }
@@ -714,10 +639,19 @@ object Extractor {
     Cleaners2.cleanAttributesString(serialized)
   }
 
-  /** Python 2 `/` on ints floors toward negative infinity. */
-  private def floorDiv(a: Int, b: Int): Int = Math.floorDiv(a, b)
-
   // ---------- 2j: get_article retry loop ----------
+
+  /** The head of each `get_article` pass, up to scoring: body id (P3), the
+    * unlikely strip when ruthless (P4), then both transforms. The
+    * reference's script/style drop (P2) is not repeated here: [[parse]]'s
+    * `Cleaners.cleanHtml` has already dropped every `<script>` and
+    * `<style>`, and no step inserts one (TransformParitySpec pins this). */
+  private def prepare(doc: Node, ruthless: Boolean): Unit = {
+    doc.findAll("body").foreach(_.setAttr("id", "readabilityBody"))
+    if (ruthless) removeUnlikelyCandidates(doc)
+    transformDoubleBreaks(doc)
+    transformMisusedDivs(doc)
+  }
 
   /** `get_article` (readability.py:631-673) — ruthless pass, then on low
     * yield one lenient retry ON THE SAME MUTATED DOC (the best-candidate
@@ -727,12 +661,7 @@ object Extractor {
     try {
       var ruthless = true
       while (true) {
-        doc.findAll("script").foreach(_.dropTree())
-        doc.findAll("style").foreach(_.dropTree())
-        doc.findAll("body").foreach(_.setAttr("id", "readabilityBody"))
-        if (ruthless) removeUnlikelyCandidates(doc)
-        transformDoubleBreaks(doc)
-        transformMisusedDivs(doc)
+        prepare(doc, ruthless)
         val candidates = scoreParagraphs(doc)
         val best = selectBestCandidate(candidates)
         if (best == null) {
@@ -797,12 +726,7 @@ object Extractor {
   def debugCandidates(html: String, opts: ExtractOptions = ExtractOptions(),
       n: Int = 5): Seq[(String, Double)] = {
     val doc = parse(html, opts.url)
-    doc.findAll("script").foreach(_.dropTree())
-    doc.findAll("style").foreach(_.dropTree())
-    doc.findAll("body").foreach(_.setAttr("id", "readabilityBody"))
-    removeUnlikelyCandidates(doc)
-    transformDoubleBreaks(doc)
-    transformMisusedDivs(doc)
+    prepare(doc, ruthless = true)
     scoreParagraphs(doc).toSeq.sortBy { case (_, s) => -s }.take(n)
       .map { case (e, s) => (describe(e, depth = 1), s) }
   }

@@ -12,7 +12,6 @@ import scala.collection.mutable
   */
 object Pages {
 
-  val MaxPages = 10
   val PageClass = "article-page"
 
   // ---- find_base_url (multi_page.py:22-132) ----

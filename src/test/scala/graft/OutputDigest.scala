@@ -8,12 +8,14 @@ import java.nio.file.{Files, Paths}
 import java.security.{DigestOutputStream, MessageDigest}
 import scala.jdk.CollectionConverters._
 
-/** Cross-build output probe: one SHA-256 over (confidence, failed, html,
+/** Cross-build output probe: a SHA-256 over (confidence, failed, html,
   * text, spans) of `Extractor.extract`, with and without a url, over every
   * html file under src/test/resources, 20 k seeded tag soups
   * ([[DivToPEquivalenceSpec.gen]]) and pages nested 100, 1 k and 3 k divs
-  * deep. Two builds that print the same line extract all of these inputs
-  * identically. Run it from the repository root:
+  * deep (the first line), then over those and 20 k seeded `<br>` soups
+  * ([[TransformParitySpec.gen]]) as well (the second line). Two builds that
+  * print the same lines extract all of these inputs identically. Run it
+  * from the repository root:
   * {{{
   * sbt "Test/runMain graft.OutputDigest"
   * }}}
@@ -27,6 +29,7 @@ object OutputDigest {
 
   private def line(i: Int): String = s"lorem ipsum dolor sit amet $i"
 
+  /** The inputs of the first line. */
   def inputs: Vector[String] = {
     val files = Files.walk(Paths.get("src/test/resources")).iterator.asScala
       .filter(_.toString.endsWith(".html")).map(_.toString).toVector.sorted
@@ -39,32 +42,41 @@ object OutputDigest {
   }
 
   def main(args: Array[String]): Unit = {
-    var report: String = null
+    var report: Seq[String] = null
     val run: Runnable = () => {
       val sha = MessageDigest.getInstance("SHA-256")
       val out = new DataOutputStream(new DigestOutputStream(OutputStream.nullOutputStream, sha))
       def str(s: String): Unit =
         if (s == null) out.writeInt(-1) else { out.writeInt(s.length); out.writeChars(s) }
-      val in = inputs
+      var n = 0
       var failed = 0
-      for (html <- in; url <- Seq(null, Url)) {
-        val s = Extractor.extract(html, ExtractOptions(url = url))
-        if (s.failed) failed += 1
-        out.writeLong(java.lang.Double.doubleToLongBits(s.confidence))
-        out.writeBoolean(s.failed)
-        str(s.html)
-        str(s.text)
-        out.writeInt(s.spans.length)
-        s.spans.foreach { case (a, b) => out.writeInt(a); out.writeInt(b) }
+      def line(label: String): String = {
+        out.flush()
+        val hex = sha.clone().asInstanceOf[MessageDigest].digest().map(b => f"$b%02x").mkString
+        s"$label inputs=$n extractions=${2 * n} failed=$failed sha256=$hex"
       }
-      out.flush()
-      report = s"inputs=${in.length} extractions=${2 * in.length} failed=$failed sha256=" +
-        sha.digest().map(b => f"$b%02x").mkString
+      def feed(in: Seq[String]): Unit = for (html <- in) {
+        n += 1
+        for (url <- Seq(null, Url)) {
+          val s = Extractor.extract(html, ExtractOptions(url = url))
+          if (s.failed) failed += 1
+          out.writeLong(java.lang.Double.doubleToLongBits(s.confidence))
+          out.writeBoolean(s.failed)
+          str(s.html)
+          str(s.text)
+          out.writeInt(s.spans.length)
+          s.spans.foreach { case (a, b) => out.writeInt(a); out.writeInt(b) }
+        }
+      }
+      feed(inputs)
+      val base = line("base")
+      feed((0 until 20000).map(TransformParitySpec.gen))
+      report = Seq(base, line("with-br-soups"))
     }
     val t = new Thread(null, run, "output-digest", 1L << 30)
     t.start()
     t.join()
     if (report == null) sys.exit(1) // the thread died; its stack trace is on stderr
-    println(report)
+    report.foreach(println)
   }
 }

@@ -1,10 +1,10 @@
 package graft
 
 import graft.dom.Node
-import graft.extract.Extractor
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Ports of the reference's pure-function micro-tests:
+/** Ports of the reference's pure-function micro-tests, run on the list-based
+  * [[DoubleBreaksReference]]:
   * TestSplitIntoParts / TestMarkIfWhitespace / TestSqueezeBreaks
   * (/root/reference/readability/readability_test.py:214-271). */
 class PartsSpec extends AnyFunSuite {
@@ -17,18 +17,18 @@ class PartsSpec extends AnyFunSuite {
     kids.foreach(d.append); d
   }
 
-  type Part = Either[String, Node]
+  import DoubleBreaksReference.Part
   private def S(s: String): Part = Left(s)
   private def E(n: Node): Part = Right(n)
 
   test("split_into_parts: empty") {
-    assert(Extractor.splitIntoParts(el("div")).isEmpty)
+    assert(DoubleBreaksReference.splitIntoParts(el("div")).isEmpty)
   }
 
   test("split_into_parts: initial text") {
     val a = el("a", "world")
     val d = div("hello", a)
-    assert(Extractor.splitIntoParts(d).toList == List(S("hello"), E(a)))
+    assert(DoubleBreaksReference.splitIntoParts(d).toList == List(S("hello"), E(a)))
     assert(d.text == null)
   }
 
@@ -37,43 +37,43 @@ class PartsSpec extends AnyFunSuite {
     val h1 = el("h1", "header")
     val d = div("hello", a, h1)
     a.tail = "!- Jerry"
-    assert(Extractor.splitIntoParts(d).toList ==
+    assert(DoubleBreaksReference.splitIntoParts(d).toList ==
       List(S("hello"), E(a), S("!- Jerry"), E(h1)))
     assert(a.tail == null)
   }
 
   test("mark_if_whitespace: no parts between") {
     val parts = Seq[Part](E(el("br")), E(el("br")))
-    assert(Extractor.markIfWhitespace(parts, 0, 1) == Set.empty)
+    assert(DoubleBreaksReference.markIfWhitespace(parts, 0, 1) == Set.empty)
   }
 
   test("mark_if_whitespace: some text") {
     val parts = Seq[Part](S("Hello"), E(el("br")), S("World"), S(""), E(el("br")))
-    assert(Extractor.markIfWhitespace(parts, 1, 3) == Set.empty)
+    assert(DoubleBreaksReference.markIfWhitespace(parts, 1, 3) == Set.empty)
   }
 
   test("mark_if_whitespace: whitespace") {
     val parts = Seq[Part](S("Hello"), E(el("br")), S("\n"), S(""), E(el("br")))
-    assert(Extractor.markIfWhitespace(parts, 1, 4) == Set(2, 3))
+    assert(DoubleBreaksReference.markIfWhitespace(parts, 1, 4) == Set(2, 3))
   }
 
   test("mark_if_whitespace: element blocks") {
     val parts = Seq[Part](S("Hello"), E(el("br")), S(""), E(el("a", "World")), S(""), E(el("br")))
-    assert(Extractor.markIfWhitespace(parts, 1, 5) == Set.empty)
+    assert(DoubleBreaksReference.markIfWhitespace(parts, 1, 5) == Set.empty)
   }
 
   private def buf(parts: Part*) = scala.collection.mutable.ArrayBuffer(parts: _*)
 
   test("squeeze_breaks: nothing to squeeze") {
     val parts = buf(S("Hello"), E(el("br")), S("World"), E(el("br")), E(el("a")), E(el("br")))
-    assert(Extractor.squeezeBreaks(parts).toList == parts.toList)
+    assert(DoubleBreaksReference.squeezeBreaks(parts).toList == parts.toList)
   }
 
   test("squeeze_breaks: one whitespace span") {
     val b1 = el("br"); val b2 = el("br"); val b3 = el("br")
     val parts = buf(S("Hello"), E(b1), S(""), S("\t"), E(b2), E(el("a")), E(b3))
     val expected = List(S("Hello"), E(b1), E(b2), E(el("a")), E(b3))
-    val got = Extractor.squeezeBreaks(parts).toList
+    val got = DoubleBreaksReference.squeezeBreaks(parts).toList
     assert(got.length == 5)
     assert(got(0) == S("Hello") && got(1) == E(b1) && got(2) == E(b2))
   }
@@ -81,13 +81,13 @@ class PartsSpec extends AnyFunSuite {
   test("squeeze_breaks: two whitespace spans") {
     val b1 = el("br"); val b2 = el("br"); val b3 = el("br")
     val parts = buf(S("Hello"), E(b1), S(""), S("\t"), E(b2), S(" "), E(b3))
-    val got = Extractor.squeezeBreaks(parts).toList
+    val got = DoubleBreaksReference.squeezeBreaks(parts).toList
     assert(got == List(S("Hello"), E(b1), E(b2), E(b3)))
   }
 
   test("squeeze_breaks: leading whitespace kept") {
     val b = el("br")
     val parts = buf(S(" "), E(b))
-    assert(Extractor.squeezeBreaks(parts).toList == List(S(" "), E(b)))
+    assert(DoubleBreaksReference.squeezeBreaks(parts).toList == List(S(" "), E(b)))
   }
 }

@@ -57,8 +57,6 @@ class TextStatsSpec extends AnyFunSuite {
   private def checkPage(html: String, what: => String): Unit = {
     checkTable(HtmlParser.parse(html), s"$what (parsed)")
     val doc = Extractor.parse(html)
-    doc.findAll("script").foreach(_.dropTree())
-    doc.findAll("style").foreach(_.dropTree())
     Extractor.removeUnlikelyCandidates(doc)
     Extractor.transformDoubleBreaks(doc)
     Extractor.transformMisusedDivs(doc)
