@@ -44,6 +44,84 @@ object HtmlParser {
 
   def parse(html: String): Node = new Parser(html).run()
 
+  /** libxml2 `htmlAutoClose`'s table: whether an incoming start tag
+    * `newTag` closes the open element `oldTag`. The parser pops open
+    * elements WHILE the innermost one is auto-closed by the incoming tag; an
+    * unknown (e.g. HTML5) element on top of the stack stops the loop, so
+    * content nests inside it, matching the era parser that produced the
+    * goldens. */
+  def autoClosedBy(newTag: String, oldTag: String): Boolean =
+    oldTag match {
+      case "p" => pClosers.contains(newTag)
+      case "li" => newTag == "li"
+      case "dd" | "dt" => newTag == "dd" || newTag == "dt"
+      case "option" => newTag == "option" || newTag == "optgroup"
+      case "td" | "th" => newTag == "td" || newTag == "th" || newTag == "tr"
+      case "tr" => newTag == "tr"
+      case _ => false
+    }
+
+  /** libxml2 `IS_BLANK_CH` — ASCII blanks only. */
+  private def isBlankCh(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\r'
+
+  private def isBlankRun(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      if (!isBlankCh(s.charAt(i))) return false
+      i += 1
+    }
+    true
+  }
+
+  /** The `areBlanks` rule for a blank run that directly follows `last`, the
+    * last child of the open element `parentTag` (see the parser's
+    * `dropsBlankRun`): dropped unless `last` is a `b`/`bold`/`em` element
+    * or the parent is `body`. */
+  private def dropsBlankAfter(last: Node, parentTag: String): Boolean =
+    parentTag != "body" &&
+      !(last.isElement && (last.tag == "b" || last.tag == "bold" || last.tag == "em"))
+
+  /** Whether [[parseFragment]] of `Serializer.serialize(top)` builds a tree
+    * equal to `top` (same tags, attributes and non-empty texts and tails, in
+    * the same places), for a `top` whose tag and attribute names are the
+    * parser's own. One walk checks that the parse would take none of its
+    * fix-ups:
+    *   - no element is auto-closed by its parent's tag ([[autoClosedBy]]);
+    *   - no `html`, `head` or `body` element (their tags merge into the
+    *     implied ones) and no raw-text or RCDATA element (its content
+    *     re-reads as text);
+    *   - no void element holds children or text (the serializer omits
+    *     them);
+    *   - no comment or processing instruction;
+    *   - no tail that the blank-run rule drops ([[dropsBlankAfter]]): a
+    *     tail is one text run of the serialization, read right after its
+    *     element is closed, when that element is its parent's last child.
+    * Everything else round-trips: the serializer escapes `&`, `<`, `>` in
+    * text and also `"` in attribute values, and the entity decoder undoes
+    * exactly that; an element's leading text is kept blank or not; every
+    * end tag closes the innermost open element. */
+  def reparsesUnchanged(top: Node): Boolean = {
+    val w = top.cursor
+    while (w.next()) if (w.entering) {
+      val n = w.node
+      if (!n.isElement) return false
+      val t = n.tag
+      if (t == "html" || t == "head" || t == "body" || rawText.contains(t) ||
+        rcdata.contains(t)) return false
+      if (voidElements.contains(t) &&
+        (n.firstChild != null || (n.text != null && n.text.nonEmpty))) return false
+      if (n ne top) {
+        val parentTag = n.parent.tag
+        if (autoClosedBy(t, parentTag)) return false
+        val tail = n.tail
+        if (tail != null && tail.nonEmpty && isBlankRun(tail) &&
+          dropsBlankAfter(n, parentTag)) return false
+      }
+    }
+    true
+  }
+
   /** Parse a fragment with a single root element (lxml
     * `fragment_fromstring`): returns the first element parsed under body. */
   def parseFragment(html: String): Node = {
@@ -295,10 +373,6 @@ object HtmlParser {
       }
     }
 
-    /** libxml2 `IS_BLANK_CH` — ASCII blanks only. */
-    private def isBlankCh(c: Char): Boolean =
-      c == ' ' || c == '\t' || c == '\n' || c == '\r'
-
     /** libxml2 `areBlanks` (HTMLparser.c, the 2.7-era variant lxml used when
       * the reference's fixtures were generated): a whitespace-only character
       * run followed by `<` (or EOF) is DROPPED unless the insertion point's
@@ -308,20 +382,14 @@ object HtmlParser {
       * between `<br><br>` and `<strong>` vanishes, text after `</h1>` stays).
       */
     private def dropsBlankRun(raw: String, atEof: Boolean): Boolean = {
-      var i = 0
-      while (i < raw.length) {
-        if (!isBlankCh(raw.charAt(i))) return false
-        i += 1
-      }
+      if (!isBlankRun(raw)) return false
       if (atEof) return true
       val t = cur
       if (t.tag == "body") return false
       val last = t.lastChild
       if (last != null) {
         if (last.tail != null) return false // lastChild is a text node
-        if (last.isElement &&
-          (last.tag == "b" || last.tag == "bold" || last.tag == "em")) return false
-        true
+        dropsBlankAfter(last, t.tag)
       } else {
         // empty element (or after own leading text): KEEP — the golden
         // corpus shows lxml kept `<div>` leading blanks (washingtonpost-001
@@ -355,21 +423,6 @@ object HtmlParser {
       n.text = content
       cur.append(n)
     }
-
-    /** libxml2 `htmlAutoClose`: pop open elements WHILE the innermost one
-      * is auto-closed by the incoming start tag. An unknown (e.g. HTML5)
-      * element on top of the stack stops the loop — content nests inside
-      * it, matching the era parser that produced the goldens. */
-    private def autoClosedBy(newTag: String, oldTag: String): Boolean =
-      oldTag match {
-        case "p" => pClosers.contains(newTag)
-        case "li" => newTag == "li"
-        case "dd" | "dt" => newTag == "dd" || newTag == "dt"
-        case "option" => newTag == "option" || newTag == "optgroup"
-        case "td" | "th" => newTag == "td" || newTag == "th" || newTag == "tr"
-        case "tr" => newTag == "tr"
-        case _ => false
-      }
 
     private def runAutoClose(newTag: String): Unit = {
       while (stack.length > 1 && autoClosedBy(newTag, cur.tag))

@@ -555,8 +555,28 @@ object Extractor {
   // ---------- 2i: sanitize ----------
 
   /** `sanitize` (readability.py:456-584). Returns the serialized,
-    * attribute-stripped article HTML. Structure of the conditional clean is
-    * replicated code-exactly, including:
+    * attribute-stripped article HTML: [[sanitizeTree]]'s decisions, then
+    * P11 ([[strippedHtml]]). */
+  def sanitize(node: Node, candidates: mutable.LinkedHashMap[Node, Double],
+      opts: ExtractOptions): String = {
+    sanitizeTree(node, candidates, opts)
+    strippedHtml(node, Cleaners2.stripAttributes(node))
+  }
+
+  /** The reference's serialized article after its attribute strip
+    * (readability.py:584, cleaners.py:5-20). `onTree` says that
+    * [[Cleaners2.stripAttributes]] has already stripped `node`, so the
+    * serialization is the string the regex fixpoint would return; otherwise
+    * the fixpoint runs on the string. */
+  private def strippedHtml(node: Node, onTree: Boolean): String = {
+    val html = Serializer.serialize(node)
+    if (onTree) html else Cleaners2.cleanAttributesString(html)
+  }
+
+  /** The tree decisions of `sanitize` (readability.py:456-583): drop
+    * headers, forms, iframes and textareas, then the conditional clean.
+    * Structure of the conditional clean is replicated code-exactly,
+    * including:
     *   - reverse document order per tag (children judged before ancestors);
     *   - `counts["li"] -= 100`; `counts["p"] / 3` floor division;
     *   - the sibling-text rescue block being nested INSIDE the `<embed>`
@@ -566,8 +586,8 @@ object Extractor {
     *   - the parent-score reassignment at readability.py:488-493 being dead
     *     (only feeds logging).
     */
-  def sanitize(node: Node, candidates: mutable.LinkedHashMap[Node, Double],
-      opts: ExtractOptions): String = {
+  private[graft] def sanitizeTree(node: Node,
+      candidates: mutable.LinkedHashMap[Node, Double], opts: ExtractOptions): Unit = {
     for (tag <- Seq("h1", "h2", "h3", "h4", "h5", "h6");
          header <- node.findAll(tag)) {
       if (classWeight(header) < 0 || linkDensity(header) > 0.33)
@@ -635,8 +655,6 @@ object Extractor {
         }
       }
     }
-    val serialized = Serializer.serialize(node)
-    Cleaners2.cleanAttributesString(serialized)
   }
 
   // ---------- 2j: get_article retry loop ----------
@@ -646,7 +664,7 @@ object Extractor {
     * reference's script/style drop (P2) is not repeated here: [[parse]]'s
     * `Cleaners.cleanHtml` has already dropped every `<script>` and
     * `<style>`, and no step inserts one (TransformParitySpec pins this). */
-  private def prepare(doc: Node, ruthless: Boolean): Unit = {
+  private[graft] def prepare(doc: Node, ruthless: Boolean): Unit = {
     doc.findAll("body").foreach(_.setAttr("id", "readabilityBody"))
     if (ruthless) removeUnlikelyCandidates(doc)
     transformDoubleBreaks(doc)
@@ -656,7 +674,21 @@ object Extractor {
   /** `get_article` (readability.py:631-673) — ruthless pass, then on low
     * yield one lenient retry ON THE SAME MUTATED DOC (the best-candidate
     * region has already been MOVED into the discarded article; the retry
-    * scores the remainder — replicated exactly). */
+    * scores the remainder — replicated exactly).
+    *
+    * The reference serializes the sanitized article, strips attributes from
+    * the string and REPARSES it (`fragment_fromstring` → `tounicode`,
+    * readability.py:584, 661-662). The reparse matters where the parser
+    * fixes the tree up: divs retagged `<p>` whose block children then pop
+    * out of the `<p>` (p auto-close, visible in the goldens), or blank
+    * tails the blank-run rule drops. It is skipped, and the article itself
+    * is the cleaned document, when both steps provably hand back what they
+    * were given: [[Cleaners2.stripAttributes]] did the strip on the tree
+    * (the serialization is then the stripped string), and
+    * `HtmlParser.reparsesUnchanged` finds none of the parser's fix-ups in
+    * it (the reparse would then build the same tree). Otherwise the string
+    * is reparsed as the reference does. ReparseParitySpec checks the two
+    * paths against each other. */
   def getArticle(doc: Node, opts: ExtractOptions): Summary = {
     try {
       var ruthless = true
@@ -670,12 +702,11 @@ object Extractor {
         } else {
           val confidence = best.score
           val article = getRawArticle(candidates, best)
-          val sanitized = sanitize(article, candidates, opts)
-          // the reference REPARSES the sanitized string
-          // (fragment_fromstring → tounicode, readability.py:661-662); this
-          // matters: divs retagged <p> whose block children then pop out of
-          // the <p> on reparse (p auto-close) — visible in the goldens
-          val cleanedDoc = HtmlParser.parseFragment(sanitized)
+          sanitizeTree(article, candidates, opts)
+          val onTree = Cleaners2.stripAttributes(article)
+          val cleanedDoc =
+            if (onTree && HtmlParser.reparsesUnchanged(article)) article
+            else HtmlParser.parseFragment(strippedHtml(article, onTree))
           val cleanedArticle = Serializer.serialize(cleanedDoc)
           val acceptable = cleanedArticle.length >= opts.retryLength
           if (ruthless && !acceptable) { ruthless = false }
@@ -831,11 +862,18 @@ object Extractor {
   }
 }
 
-/** String-level `clean_attributes` (/root/reference/readability/cleaners.py:5-20)
-  * applied to serialized HTML exactly like the reference (regex loop to
-  * fixpoint), preserving its quirks: only *valued*, space-preceded
-  * attributes are stripped; `on*` means `o` followed by `n`s; empty
-  * quoted values survive. */
+/** `clean_attributes` (cleaners.py:5-20), P11.
+  *
+  * [[cleanAttributesString]] is the reference's own form: a regex loop to
+  * fixpoint over serialized HTML, with its quirks: only *valued*,
+  * space-preceded attributes are stripped; `on*` means `o` followed by
+  * `n`s; empty quoted values survive; the greedy `([^>]+) ` strips one
+  * attribute per tag per round, so n strippable attributes on one tag
+  * cost n rescans of the string.
+  *
+  * [[stripAttributes]] does the same strip on the tree in one walk, when
+  * the serialization lets the string strip be read off the tree; the
+  * extraction path takes it and falls back to the string. */
 object Cleaners2 {
   private val htmlstrip = java.util.regex.Pattern.compile(
     "<" +
@@ -854,5 +892,93 @@ object Cleaners2 {
       m = htmlstrip.matcher(h)
     }
     h
+  }
+
+  /** Strips from every element under `top` each attribute that
+    * [[cleanAttributesString]] would strip from `Serializer.serialize(top)`:
+    * a non-empty value under a name that [[isStripName]] accepts whole. Then
+    * the serialization of `top` is the string the fixpoint returns. Returns
+    * false, leaving the tree alone, when that argument does not hold: some
+    * attribute value holds a strip site ([[holdsSite]]), or `top` holds a
+    * comment, a processing instruction or a script/style element, whose
+    * text the serializer writes raw.
+    *
+    * Why: the serializer escapes `<` and `>` in text and values, and `"` in
+    * values, so apart from the raw text excluded above each `<` opens a tag
+    * that its first `>` closes. A site is a space, then the pattern's name,
+    * which has only `[-a-zA-Z]`, then ` *=`. No attribute name holds a space
+    * or `=`, so outside the values a site is an attribute's own ` name="`,
+    * the whole name matching. Each regex match therefore starts at a tag's
+    * `<` (its `[^>]+` cannot cross an earlier tag's `>`) and, greedy, takes
+    * the tag's last matching attribute whose value `"[^"]+"` accepts, that
+    * is, a non-empty one; `<$1$2>` is the tag without that attribute, and
+    * the fixpoint stops when no tag holds one. */
+  def stripAttributes(top: Node): Boolean = {
+    var doomed: mutable.ArrayBuffer[Node] = null
+    val w = top.cursor
+    while (w.next()) if (w.entering) {
+      val n = w.node
+      if (!n.isElement || Serializer.isRawText(n.tag)) return false
+      if (n.hasAttrs) {
+        val it = n.attrs.iterator
+        while (it.hasNext) {
+          val (k, v) = it.next()
+          if (holdsSite(v)) return false
+          if (strips(k, v)) {
+            if (doomed == null) doomed = new mutable.ArrayBuffer[Node]
+            if (doomed.isEmpty || (doomed.last ne n)) doomed += n
+          }
+        }
+      }
+    }
+    if (doomed != null) doomed.foreach(_.attrs.filterInPlace((k, v) => !strips(k, v)))
+    true
+  }
+
+  private def strips(name: String, value: String): Boolean =
+    value.nonEmpty && isStripName(name, 0, name.length)
+
+  @inline private def isNameLetter(c: Char): Boolean = {
+    val l = c | 0x20
+    c == '-' || (l >= 'a' && l <= 'z')
+  }
+
+  /** Whether `s` holds a strip site: a space, a maximal run of
+    * `[-a-zA-Z]` that [[isStripName]] accepts, any spaces, then `=`. The
+    * pattern's name part has only those letters, so it must take the whole
+    * run. The serializer's escapes touch none of these chars, so the raw
+    * value has a site when its serialized form has one. */
+  private def holdsSite(s: String): Boolean = {
+    var i = s.indexOf(' ')
+    while (i >= 0) {
+      var j = i + 1
+      while (j < s.length && isNameLetter(s.charAt(j))) j += 1
+      if (j > i + 1) {
+        var k = j
+        while (k < s.length && s.charAt(k) == ' ') k += 1
+        if (k < s.length && s.charAt(k) == '=' && isStripName(s, i + 1, j)) return true
+      }
+      i = s.indexOf(' ', j)
+    }
+    false
+  }
+
+  /** Whether `s(from until to)` matches the whole name part of the strip
+    * pattern, `width|height|style|[-a-z]*color|background[-a-z]*|on*`, case
+    * folded over ASCII only, as `CASE_INSENSITIVE` without `UNICODE_CASE`
+    * folds. */
+  private def isStripName(s: String, from: Int, to: Int): Boolean = {
+    val n = to - from
+    if (n == 0) return false
+    var i = from
+    while (i < to) { if (!isNameLetter(s.charAt(i))) return false; i += 1 }
+    def is(word: String): Boolean = n == word.length && s.regionMatches(true, from, word, 0, n)
+    if (is("width") || is("height") || is("style")) return true
+    if (n >= 5 && s.regionMatches(true, to - 5, "color", 0, 5)) return true
+    if (n >= 10 && s.regionMatches(true, from, "background", 0, 10)) return true
+    if ((s.charAt(from) | 0x20) != 'o') return false
+    i = from + 1
+    while (i < to) { if ((s.charAt(i) | 0x20) != 'n') return false; i += 1 }
+    true
   }
 }

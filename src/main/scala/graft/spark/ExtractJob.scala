@@ -64,16 +64,22 @@ object ExtractJob {
   /** Stable data-level bucket of a turn — the resume/lineage unit. Must be
     * a pure function of the ROW (not of Spark partition indexes), so a
     * restarted run reproduces it. */
-  def bucketCol(numBuckets: Int): org.apache.spark.sql.Column = {
-    val salt = saltFor(numBuckets)
-    pmod(hash(col("conv_id"), pmod(col("turn_idx"), lit(salt))), lit(numBuckets))
-  }
+  def bucketCol(numBuckets: Int): org.apache.spark.sql.Column =
+    pmod(hash(bucketKey(numBuckets): _*), lit(numBuckets))
+
+  /** The salted key that [[bucketCol]] hashes: conv_id, turn_idx mod salt. */
+  private def bucketKey(numBuckets: Int): Seq[org.apache.spark.sql.Column] =
+    Seq(col("conv_id"), pmod(col("turn_idx"), lit(saltFor(numBuckets))))
 
   /** Core distributed extraction: bucket + salt, then the extraction
     * operator. Output is sorted within partitions by (conv_id, turn_idx)
-    * — stable turn ordering per the north rule. Lineage is tracked per
-    * data-level bucket (a partition may host several buckets after the
-    * hash exchange). */
+    * — stable turn ordering per the north rule. The exchange hashes
+    * [[bucketCol]]'s own key into `numBuckets` partitions: Spark's `hash()`
+    * and its hash partitioning are both Murmur3 with seed 42 taken `pmod`
+    * the count, so partition i holds exactly bucket i and each bucket gets a
+    * task of its own (hashing the bucket id a second time would leave some
+    * partitions empty and stack buckets on others). Lineage is tracked per
+    * data-level bucket. */
   def run(spark: SparkSession, turns: Dataset[Turn], numBuckets: Int,
       fingerprint: String = "local"): Result =
     runImpl(spark, turns, numBuckets, fingerprint, exchange = true)
@@ -95,7 +101,7 @@ object ExtractJob {
       .withColumn("bucket", bucketCol(numBuckets))
       .select("bucket", "conv_id", "turn_idx", "text")
     val bucketed =
-      (if (exchange) tagged.repartition(numBuckets, col("bucket")) else tagged)
+      (if (exchange) tagged.repartition(numBuckets, bucketKey(numBuckets): _*) else tagged)
         .sortWithinPartitions("conv_id", "turn_idx")
     val acc = spark.sparkContext.collectionAccumulator[PartitionLineage]("graft.lineage")
     val extracted = GraftOps.plan(bucketed, Some(LineageTap(fingerprint, acc)))

@@ -16,6 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * straddle those steps, and the ratio then measures the step.
   * Every output is also checked: not failed, with the expected leading text.
   *
+  * Many strippable attributes give one tag n distinct names that the
+  * reference's attribute strip removes; its regex fixpoint removes one per
+  * round and rescans the whole article each round.
+  *
   * Nested paragraphs put a scored `<p>` at every level of a div nest, so
   * every level is a candidate whose text statistics span all deeper levels;
   * stray end tags close nothing at the bottom of a deep nest.
@@ -80,6 +84,10 @@ class HostileInputSpec extends AnyFunSuite {
     linear(manyAttributes, 40000, s"${line(0)}, ${line(1)}")
   }
 
+  test("many strippable attributes: doubling one tag's ...color attributes at most ~doubles the time") {
+    linear(manyStrippableAttributes, 16000, s"${line(0)}, ${line(1)}")
+  }
+
   test("nested paragraphs: doubling 2 k div levels with a <p> each at most ~doubles the time") {
     linear(nestedParagraphs, 2000, s"${line(0)}, ${line(1)}")
   }
@@ -124,6 +132,17 @@ object HostileInputSpec {
       s"<p>$eightLines</p>" +
       s"<p>${(8 until 16).map(line).mkString(", ")}</p></div>")
 
+  /** Lowercase letters that spell `i` in base 26, so every name differs. */
+  private def letters(i: Int): String =
+    if (i < 26) ('a' + i).toChar.toString else letters(i / 26 - 1) + ('a' + i % 26).toChar
+
+  /** One tag with n distinct names that the attribute strip takes
+    * (`acolor`, `bcolor`, …), each with a value. */
+  def manyStrippableAttributes(n: Int): String =
+    page("<div " + (0 until n).map(i => s"""${letters(i)}color="v$i"""").mkString(" ") + ">" +
+      s"<p>$eightLines</p>" +
+      s"<p>${(8 until 16).map(line).mkString(", ")}</p></div>")
+
   def deepNesting(n: Int): String =
     page("<div>" * n + s"<p>$eightLines</p>" + "</div>" * n)
 
@@ -134,5 +153,6 @@ object HostileInputSpec {
     page("<div>" * n + s"<p>$eightLines</p>" + "</span>" * n + "</div>" * n)
 
   val shapes: Seq[Int => String] = Seq(brSoup, flatParagraphs, wideSiblings,
-    manyAttributes, deepNesting, nestedParagraphs, strayEndTags)
+    manyAttributes, manyStrippableAttributes, deepNesting, nestedParagraphs,
+    strayEndTags)
 }

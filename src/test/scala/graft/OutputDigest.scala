@@ -13,7 +13,9 @@ import scala.jdk.CollectionConverters._
   * html file under src/test/resources, 20 k seeded tag soups
   * ([[DivToPEquivalenceSpec.gen]]) and pages nested 100, 1 k and 3 k divs
   * deep (the first line), then over those and 20 k seeded `<br>` soups
-  * ([[TransformParitySpec.gen]]) as well (the second line). Two builds that
+  * ([[TransformParitySpec.gen]]) as well (the second line), then over all
+  * of those and 20 k seeded attribute soups ([[AttrSoups.gen]]) (the third
+  * line). Two builds that
   * print the same lines extract all of these inputs identically. Run it
   * from the repository root:
   * {{{
@@ -71,7 +73,9 @@ object OutputDigest {
       feed(inputs)
       val base = line("base")
       feed((0 until 20000).map(TransformParitySpec.gen))
-      report = Seq(base, line("with-br-soups"))
+      val br = line("with-br-soups")
+      feed((0 until 20000).map(AttrSoups.gen))
+      report = Seq(base, br, line("with-attr-soups"))
     }
     val t = new Thread(null, run, "output-digest", 1L << 30)
     t.start()

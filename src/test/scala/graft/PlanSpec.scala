@@ -113,7 +113,13 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = finalPlan(df)
     val exchanges = "Exchange ".r.findAllIn(plan).size
     assert(exchanges == 1, s"expected exactly 1 exchange, got $exchanges\n" + plan)
-    assert(plan.contains("hashpartitioning(bucket"), plan)
+    // the exchange hashes the bucket's own inputs, so partition i holds
+    // exactly bucket i
+    val placed = df.select(org.apache.spark.sql.functions.spark_partition_id(),
+      ExtractJob.bucketCol(8)).collect().map(r => (r.getInt(0), r.getInt(1)))
+    assert(placed.length == turns.length, plan)
+    assert(placed.forall { case (pid, bucket) => pid == bucket },
+      s"rows outside their bucket's partition: ${placed.filter(p => p._1 != p._2).toSeq}\n" + plan)
     // the salt: pmod(turn_idx, k) mixed into the bucket hash
     assert(plan.contains("pmod(turn_idx"), "skew salt missing from bucket key\n" + plan)
     // sort is partition-local (global=false) — no global ordering shuffle
