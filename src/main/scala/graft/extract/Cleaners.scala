@@ -102,28 +102,25 @@ object Cleaners {
     if (a == 0 && b == s.length) s else s.substring(a, b)
   }
 
-  /** Zero-allocation `clean(textContent).length` over a DOM subtree —
-    * the extraction hot path calls text_length per node per decision
-    * (scoring, link density, sanitize); building the subtree string and
-    * running two regexes each time dominates the garbage profile. This
-    * streams the subtree's text pieces through a normalizer with exactly
-    * `clean`'s semantics: an ASCII-whitespace run containing '\n' → one
-    * unit; each maximal [ \t] subrun → one unit; \r \f \x0B pass through;
-    * unicode-stripped at both ends. Property-tested equal to
-    * `clean(textContent).length`.
+  /** Streaming `len(clean(text))` (htmls.py:122-125, readability.py:44-45)
+    * without building the string or running the two regexes: the text
+    * pieces of a subtree go through [[step]] one char at a time, with
+    * exactly `clean`'s semantics: an ASCII-whitespace run containing '\n' →
+    * one unit; each maximal [ \t] subrun → one unit; \r \f \x0B pass
+    * through; unicode-stripped at both ends.
     *
     * It keeps a running total, [[units]], that ignores the stripping: one
     * unit per char outside an ASCII-whitespace run and the run's units when
     * the run closes, i.e. when the next char outside it arrives. A
     * whitespace run between two non-space chars is then counted whole, so
     * the clean length of any stretch of the stream is `units` after its
-    * last non-space char minus `units` before its first. The result is that
-    * difference for the whole stream; `Extractor.scoreParagraphs` takes it
-    * for every element of a subtree from one walk. */
+    * last non-space char minus `units` before its first.
+    * `Extractor.TextStats` takes that difference for every node of a
+    * subtree from one walk; TextStatsSpec and CleanLengthSpec pin it to
+    * `clean(textContent).length`. */
   final class CleanLengthCounter {
     private var total = 0
     private var end = 0
-    private var start = -1
     // pending ASCII-ws run state
     private var runUnits = 0
     private var runHasNl = false
@@ -154,29 +151,6 @@ object Cleaners {
         else { end = total; true }
       }
     }
-
-    def accept(s: String): Unit = {
-      if (s == null) return
-      var i = 0
-      while (i < s.length) {
-        if (step(s.charAt(i)) && start < 0) start = total - 1
-        i += 1
-      }
-    }
-
-    def result: Int = if (start < 0) 0 else end - start
-  }
-
-  /** Streaming `len(clean(node.text_content()))` (readability.py:44-45). */
-  def cleanLength(n: Node): Int = {
-    val c = new CleanLengthCounter
-    val w = n.cursor
-    while (w.next()) {
-      val x = w.node
-      if (w.entering) { if (x.isElement) c.accept(x.text) }
-      else if (x ne n) c.accept(x.tail)
-    }
-    c.result
   }
 
   /** Streaming comma count of `node.text_content()`: `min(count, cap)`,

@@ -160,58 +160,11 @@ object Extractor {
     s
   }
 
-  /** Single-pass subtree statistics: total clean text length, summed
-    * per-anchor clean text lengths (each `.//a` measured independently,
-    * nested anchors counted repeatedly — exactly
-    * `sum(text_length(a) for a in findall('.//a'))`), and descendant tag
-    * counts for sanitize. One walk replaces the reference's ~9 subtree
-    * traversals per judged node. Its callers are sanitize's conditional
-    * clean and [[linkDensity]]; [[scoreParagraphs]] reads the same numbers
-    * for every element from one [[TextStats]] walk instead. */
-  final case class SubtreeStats(textLen: Int, linkLen: Int,
-      p: Int, img: Int, li: Int, a: Int, embed: Int, input: Int)
-
-  def subtreeStats(elem: Node): SubtreeStats = {
-    val root = new Cleaners.CleanLengthCounter
-    val active = new mutable.ArrayBuffer[Cleaners.CleanLengthCounter](2)
-    var linkLen = 0
-    var nP = 0; var nImg = 0; var nLi = 0; var nA = 0; var nEmbed = 0; var nInput = 0
-    def feed(s: String): Unit = {
-      root.accept(s)
-      var i = 0
-      while (i < active.length) { active(i).accept(s); i += 1 }
-    }
-    val w = elem.cursor
-    while (w.next()) {
-      val n = w.node
-      if (w.entering) {
-        if (n.isElement) {
-          if (n ne elem) n.tag match {
-            case "p" => nP += 1
-            case "img" => nImg += 1
-            case "li" => nLi += 1
-            case "a" => nA += 1; active += new Cleaners.CleanLengthCounter
-            case "embed" => nEmbed += 1
-            case "input" => nInput += 1
-            case _ =>
-          }
-          feed(n.text)
-        }
-      } else if (n ne elem) {
-        if (n.tag == "a") linkLen += active.remove(active.length - 1).result
-        feed(n.tail)
-      }
-    }
-    SubtreeStats(root.result, linkLen, nP, nImg, nLi, nA, nEmbed, nInput)
-  }
-
-  /** `get_link_density` (readability.py:381-388) — single pass. Called
-    * by [[getRawArticle]]'s `<p>` rescue and sanitize's header test, once
-    * per judged node; [[scoreParagraphs]] uses its [[TextStats]] table. */
-  def linkDensity(elem: Node): Double = {
-    val s = subtreeStats(elem)
-    s.linkLen.toDouble / math.max(s.textLen, 1)
-  }
+  /** `get_link_density` (readability.py:381-388), from a [[TextStats]]
+    * walk of `elem`. Called by [[getRawArticle]]'s `<p>` rescue and
+    * sanitize's header test, once per judged node; [[scoreParagraphs]]
+    * reads the table it already built. */
+  def linkDensity(elem: Node): Double = new TextStats(elem).linkDensity(0)
 
   // ---------- P4: remove_unlikely_candidates ----------
 
@@ -350,14 +303,17 @@ object Extractor {
 
   // ---------- A3/A4: score_paragraphs ----------
 
-  /** Text statistics of every node under `top`, from one cursor walk, for
-    * one [[scoreParagraphs]] call; it describes the tree as it was when
-    * built. Node `i` is the `i`-th entered (`top` is 0): `nodes(i)`, its
-    * parent's index `parent(i)` (-1 for `top`), and, exactly as the per-node
-    * functions compute them, `cleanLen(i)` = `Cleaners.cleanLength`,
-    * `commas(i)` = `Cleaners.countCommas` and `linkLen(i)` =
-    * `subtreeStats(_).linkLen`. `p`, `pre` and `td` list the descendants
-    * with those tags in document order, as `findAll` does.
+  /** Text statistics of every node under `top`, from one cursor walk; it
+    * describes the tree as it was when built. [[scoreParagraphs]] reads
+    * every node of one table; sanitize, the header test and the sibling
+    * merge build one per judged node and read node 0. Node `i` is the `i`-th
+    * entered (`top` is 0): `nodes(i)`, its parent's index `parent(i)` (-1
+    * for `top`), and the reference's own measures of it: `cleanLen(i)` =
+    * `len(clean(text_content()))` (readability.py:44-45), `commas(i)` = the
+    * `,`s in its `textContent`, and `linkLen(i)` = the sum of `cleanLen`
+    * over its `.//a` descendants (readability.py:381-388). `p`, `pre` and
+    * `td` list the descendants with those tags in document order, as
+    * `findAll` does; `img`, `li`, `input` and `embed` count them.
     *
     *   - Clean length: the walk feeds the text pieces, in `textContent`
     *     order, through one [[Cleaners.CleanLengthCounter]]. A node's value
@@ -369,15 +325,16 @@ object Extractor {
     *   - Commas: the running comma count at leave minus that at enter.
     *   - Link length: summed bottom-up on leave events, each child's total
     *     plus, for an `<a>` child, its clean length, so nested anchors
-    *     count repeatedly, as in `subtreeStats`.
+    *     count once per enclosing anchor, as the reference's sum does.
     */
   private[graft] final class TextStats(top: Node) {
     var size = 0
-    var nodes = new Array[Node](256)
-    var parent = new Array[Int](256)
-    var cleanLen = new Array[Int](256) // while open: units before its first non-space char
-    var commas = new Array[Int](256) // while open: the running count at enter
-    var linkLen = new Array[Int](256)
+    var nodes = new Array[Node](16)
+    var parent = new Array[Int](16)
+    var cleanLen = new Array[Int](16) // while open: units before its first non-space char
+    var commas = new Array[Int](16) // while open: the running count at enter
+    var linkLen = new Array[Int](16)
+    var img, li, input, embed = 0
     private val pB, preB, tdB = new mutable.ArrayBuilder.ofInt
 
     private val counter = new Cleaners.CleanLengthCounter
@@ -426,6 +383,10 @@ object Extractor {
             case "p" => pB += i
             case "pre" => preB += i
             case "td" => tdB += i
+            case "img" => img += 1
+            case "li" => li += 1
+            case "input" => input += 1
+            case "embed" => embed += 1
             case _ =>
           }
           feed(n.text)
@@ -549,7 +510,9 @@ object Extractor {
     article
   }
 
-  private val sentenceEndRe = java.util.regex.Pattern.compile("\\.( |$)")
+  // UNIX_LINES: `$` matches before a final '\n' only, as in Python's `re`
+  private val sentenceEndRe =
+    java.util.regex.Pattern.compile("\\.( |$)", java.util.regex.Pattern.UNIX_LINES)
   private def sentenceEnd(s: String): Boolean = sentenceEndRe.matcher(s).find()
 
   // ---------- 2i: sanitize ----------
@@ -608,14 +571,14 @@ object Extractor {
         if (weight + contentScore < 0) {
           el.dropTree()
         } else if (Cleaners.countCommas(el, 10) < 10) {
-          val st = subtreeStats(el)
-          val pCount = st.p
+          val st = new TextStats(el)
+          val pCount = st.p.length
           val imgCount = st.img
           val liCount = st.li - 100
           val inputCount = st.input
           val embedCount = st.embed
-          val contentLength = st.textLen
-          val ld = st.linkLen.toDouble / math.max(st.textLen, 1)
+          val contentLength = st.cleanLen(0)
+          val ld = st.linkDensity(0)
 
           var toRemove = false
           if (pCount > 0 && imgCount > pCount) toRemove = true
@@ -632,14 +595,14 @@ object Extractor {
             var followingLen = -1
             var sib = el.nextSibling
             while (followingLen < 0 && sib != null) {
-              val l = Cleaners.cleanLength(sib)
+              val l = new TextStats(sib).cleanLen(0)
               if (l > 0) followingLen = l
               sib = sib.nextSibling
             }
             var precedingLen = -1
             sib = el.prevSibling
             while (precedingLen < 0 && sib != null) {
-              val l = Cleaners.cleanLength(sib)
+              val l = new TextStats(sib).cleanLen(0)
               if (l > 0) precedingLen = l
               sib = sib.prevSibling
             }
@@ -665,7 +628,8 @@ object Extractor {
     * `Cleaners.cleanHtml` has already dropped every `<script>` and
     * `<style>`, and no step inserts one (TransformParitySpec pins this). */
   private[graft] def prepare(doc: Node, ruthless: Boolean): Unit = {
-    doc.findAll("body").foreach(_.setAttr("id", "readabilityBody"))
+    val body = doc.findFirst("body")
+    if (body != null) body.setAttr("id", "readabilityBody")
     if (ruthless) removeUnlikelyCandidates(doc)
     transformDoubleBreaks(doc)
     transformMisusedDivs(doc)

@@ -17,9 +17,10 @@ object Pages {
   // ---- find_base_url (multi_page.py:22-132) ----
 
   private val pageNumberRe = java.util.regex.Pattern.compile(
-    "((_|-)?p[a-z]*|(_|-))[0-9]{1,2}$") // case-SENSITIVE: the reference
-  // passes re.IGNORECASE as re.sub's `count` argument, not flags
-  // (multi_page.py:50) — the flag never applies.
+    "((_|-)?p[a-z]*|(_|-))[0-9]{1,2}$", java.util.regex.Pattern.UNIX_LINES)
+  // case-SENSITIVE: the reference passes re.IGNORECASE as re.sub's `count`
+  // argument, not flags (multi_page.py:50) — the flag never applies.
+  // UNIX_LINES: `$` matches before a final '\n' only, as in Python's `re`.
 
   private def cleanSegmentPageNumber(segments: Array[String], index: Int,
       segment: String): String = {

@@ -64,7 +64,9 @@ object Regexes {
   val extraneous: Pattern = ci(
     "print|archive|comment|discuss|e[\\-]?mail|share|reply|all|login|sign|single")
   val divToPElements: Pattern = ci("<(a|blockquote|dl|div|img|ol|p|pre|table|ul)")
-  val nextLink: Pattern = ci("(next|weiter|continue|>[^\\|]$)")
+  // UNIX_LINES: `$` matches before a final '\n' only, as in Python's `re`
+  val nextLink: Pattern =
+    Pattern.compile("(next|weiter|continue|>[^\\|]$)", Pattern.CASE_INSENSITIVE | Pattern.UNIX_LINES)
   val prevLink: Pattern = ci("(prev|earl|old|new|<)")
   val page: Pattern = ci("pag(e|ing|inat)")
   val firstLast: Pattern = ci("(first|last)")

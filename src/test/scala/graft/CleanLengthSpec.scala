@@ -1,16 +1,19 @@
 package graft
 
 import graft.dom.{HtmlParser, Node}
-import graft.extract.Cleaners
+import graft.extract.{Cleaners, Extractor}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
-/** The streaming CleanLengthCounter must agree exactly with
+/** The streaming clean length (`Cleaners.CleanLengthCounter`, read
+  * through `Extractor.TextStats`) must agree exactly with
   * `clean(textContent).length` — the hot path depends on it. */
 class CleanLengthSpec extends AnyFunSuite {
 
   private def reference(n: Node): Int = Cleaners.clean(n.textContent).length
+
+  private def cleanLength(n: Node): Int = new Extractor.TextStats(n).cleanLen(0)
 
   private val alphabet: Array[Char] =
     ("abcXYZ09" + " \t\n\r\f\u000B\u00A0" + ",.\u00E9\u4E16").toCharArray
@@ -28,7 +31,7 @@ class CleanLengthSpec extends AnyFunSuite {
       val s = randomText(rnd, 60)
       val n = new Node("div")
       n.text = s
-      assert(Cleaners.cleanLength(n) == Cleaners.clean(s).length,
+      assert(cleanLength(n) == Cleaners.clean(s).length,
         s"for ${s.map(_.toInt).mkString(",")}")
     }
   }
@@ -42,7 +45,7 @@ class CleanLengthSpec extends AnyFunSuite {
       span.text = randomText(rnd, 30)
       span.tail = randomText(rnd, 30)
       div.append(span)
-      assert(Cleaners.cleanLength(div) == reference(div))
+      assert(cleanLength(div) == reference(div))
     }
   }
 
@@ -51,7 +54,7 @@ class CleanLengthSpec extends AnyFunSuite {
     val doc = HtmlParser.parse(html)
     doc.iterSubtree.foreach { n =>
       if (n.isElement)
-        assert(Cleaners.cleanLength(n) == reference(n), s"node ${n.tag}")
+        assert(cleanLength(n) == reference(n), s"node ${n.tag}")
     }
   }
 

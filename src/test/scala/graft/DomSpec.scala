@@ -1,7 +1,7 @@
 package graft
 
 import graft.dom.{Entities, HtmlParser, Node, Serializer}
-import graft.extract.Cleaners
+import graft.extract.{Cleaners, Extractor}
 import org.scalatest.funsuite.AnyFunSuite
 
 class DomSpec extends AnyFunSuite {
@@ -285,13 +285,10 @@ class DomSpec extends AnyFunSuite {
       // commas in the text pieces (and in class values, which must not count)
       val html = DivToPEquivalenceSpec.gen(seed).replace("words", "wo,rds, ").replace("match", "ma,tch")
       HtmlParser.parse(html).iterSubtree.foreach { n =>
-        val pieces = textPieces(n)
-        val text = pieces.mkString
-        val counter = new Cleaners.CleanLengthCounter
-        pieces.foreach(counter.accept)
+        val text = textPieces(n).mkString
         val commas = text.count(_ == ',')
         assert(n.textContent == text, s"seed $seed, $n")
-        assert(Cleaners.cleanLength(n) == counter.result, s"seed $seed, $n")
+        assert(new Extractor.TextStats(n).cleanLen(0) == Cleaners.clean(text).length, s"seed $seed, $n")
         assert(Cleaners.countCommas(n) == commas, s"seed $seed, $n")
         assert(Cleaners.countCommas(n, cap = 2) == math.min(commas, 2), s"seed $seed, $n")
       }

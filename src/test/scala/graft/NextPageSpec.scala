@@ -1,7 +1,7 @@
 package graft
 
 import graft.dom.HtmlParser
-import graft.extract.{Extractor, Pages}
+import graft.extract.{Extractor, Pages, Regexes}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets
@@ -43,5 +43,12 @@ class NextPageSpec extends AnyFunSuite {
     val dup = HtmlParser.parseFragment(res("duplicate-page-duplicate.html"))
     assert(!Pages.isSuspectedDuplicate(article, unique))
     assert(Pages.isSuspectedDuplicate(article, dup))
+  }
+
+  test("the next-link pattern's `$` matches before a final \\n only, as Python's") {
+    assert(Regexes.search(Regexes.nextLink, "page>2"))
+    assert(Regexes.search(Regexes.nextLink, "page>2\n"))
+    assert(!Regexes.search(Regexes.nextLink, "page>2\r"))
+    assert(!Regexes.search(Regexes.nextLink, "page>2\r\n"))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.extract.{ExtractOptions, Extractor}
+import graft.spark.TranscriptGen
 
 import java.io.{DataOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets.ISO_8859_1
@@ -15,8 +16,10 @@ import scala.jdk.CollectionConverters._
   * deep (the first line), then over those and 20 k seeded `<br>` soups
   * ([[TransformParitySpec.gen]]) as well (the second line), then over all
   * of those and 20 k seeded attribute soups ([[AttrSoups.gen]]) (the third
-  * line). Two builds that
-  * print the same lines extract all of these inputs identically. Run it
+  * line), then over all of those, 20 k seeded sanitize soups
+  * ([[SanitizeSoups.gen]]) and the crafted `TranscriptGen` sanitize, retry
+  * and sibling-merge pages for ids 0 to 99 (the fourth line). Two builds
+  * that print the same lines extract all of these inputs identically. Run it
   * from the repository root:
   * {{{
   * sbt "Test/runMain graft.OutputDigest"
@@ -75,7 +78,10 @@ object OutputDigest {
       feed((0 until 20000).map(TransformParitySpec.gen))
       val br = line("with-br-soups")
       feed((0 until 20000).map(AttrSoups.gen))
-      report = Seq(base, br, line("with-attr-soups"))
+      val attr = line("with-attr-soups")
+      feed((0 until 20000).map(SanitizeSoups.gen) ++ (0L until 100L).flatMap(id =>
+        Seq(TranscriptGen.sanitizeHtml(id), TranscriptGen.retryHtml(id), TranscriptGen.siblingHtml(id))))
+      report = Seq(base, br, attr, line("with-sanitize-soups"))
     }
     val t = new Thread(null, run, "output-digest", 1L << 30)
     t.start()

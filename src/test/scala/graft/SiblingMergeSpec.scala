@@ -41,4 +41,19 @@ class SiblingMergeSpec extends AnyFunSuite {
     val r = summary(42)
     assert(!r.text.contains(TranscriptGen.SibSkip))
   }
+
+  test("a short sibling <p> ends a sentence only before a final \\n, as Python's `$`") {
+    val long = "a long paragraph of the main article that scores well, and keeps on going " * 3
+    def merged(tail: String): Boolean = {
+      val html = s"<html><body><div id=\"main\"><p>$long</p><p>$long</p></div>" +
+        s"<p>A short line.$tail</p></body></html>"
+      val r = Extractor.extract(html, ExtractOptions())
+      assert(r.text.startsWith(long.trim), r.text)
+      r.text.contains("A short line.")
+    }
+    assert(!merged("\r\n"))
+    assert(!merged("\r"))
+    assert(merged("\n"))
+    assert(merged(""))
+  }
 }

@@ -10,17 +10,21 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-/** Differential test of the one-walk table that `scoreParagraphs` reads:
-  * on every node, `Extractor.TextStats` must equal the per-node functions
-  * `Cleaners.cleanLength`, `Cleaners.countCommas` and
-  * `Extractor.subtreeStats(_).linkLen`, and its `p` / `pre` / `td` lists
-  * must equal `findAll`. Inputs: every html file under src/test/resources,
-  * 20 k seeded tag soups with whitespace of every class the clean length
-  * treats apart and commas injected into their text, and the hostile
-  * shapes at small sizes. Each page is checked as parsed and as
-  * `getArticle` hands it to scoring, where `scoreParagraphs` must also equal
-  * the naive per-node loop it replaced, score for score. */
+/** Differential test of the one-walk table that scoring, sanitize, the
+  * header test and the sibling merge read. On every element,
+  * `Extractor.TextStats` must equal the reference's own definitions:
+  * `len(clean(text_content()))`, the `,`s in `textContent`, and the sum of
+  * the clean lengths of the `.//a` descendants. Its `p` / `pre` / `td`
+  * lists must equal `findAll`, and its `img` / `li` / `input` / `embed`
+  * counts `findAll(_).size`, on one table per element, as sanitize builds
+  * them. Inputs: every html file under src/test/resources, 20 k seeded tag
+  * soups with whitespace of every class the clean length treats apart and
+  * commas injected into their text, and the hostile shapes at small sizes.
+  * Each page is checked as parsed and as `getArticle` hands it to scoring,
+  * where `scoreParagraphs` must also equal the naive per-node loop it
+  * replaced, score for score. */
 class TextStatsSpec extends AnyFunSuite {
+  import TextStatsSpec._
 
   private def checkTable(doc: Node, what: => String): Unit = {
     val t = new Extractor.TextStats(doc)
@@ -30,15 +34,25 @@ class TextStatsSpec extends AnyFunSuite {
       val n = w.node
       assert(t.nodes(i) eq n, s"$what: node $i")
       if (n.isElement) {
-        assert(t.cleanLen(i) == Cleaners.cleanLength(n), s"$what: cleanLength of $n")
-        assert(t.commas(i) == Cleaners.countCommas(n), s"$what: countCommas of $n")
-        assert(t.linkLen(i) == Extractor.subtreeStats(n).linkLen, s"$what: linkLen of $n")
+        assert(t.cleanLen(i) == cleanLen(n), s"$what: cleanLen of $n")
+        assert(t.commas(i) == n.textContent.count(_ == ','), s"$what: commas of $n")
+        assert(t.linkLen(i) == linkLen(n), s"$what: linkLen of $n")
+        checkCounts(n, s"$what, $n")
       }
       i += 1
     }
     assert(t.size == i, what)
     for ((tag, list) <- Seq("p" -> t.p, "pre" -> t.pre, "td" -> t.td))
       assert(list.map(t.nodes(_)).toSeq == doc.findAll(tag).toSeq, s"$what: $tag list")
+  }
+
+  /** A table built on `n` counts `n`'s descendants, not `n`, as `findAll`
+    * finds them. */
+  private def checkCounts(n: Node, what: => String): Unit = {
+    val t = new Extractor.TextStats(n)
+    for ((tag, count) <- Seq("p" -> t.p.length, "img" -> t.img, "li" -> t.li,
+        "input" -> t.input, "embed" -> t.embed))
+      assert(count == n.findAll(tag).size, s"$what: $tag count")
   }
 
   /** `scoreParagraphs` equals the naive loop: same candidates, same
@@ -114,17 +128,26 @@ class TextStatsSpec extends AnyFunSuite {
   }
 }
 
-/** The per-node `score_paragraphs` loop that the one-walk table replaced:
-  * `findAll` per tag, `cleanLength` and `countCommas` per paragraph,
-  * `linkDensity` per candidate. */
+/** The per-node `score_paragraphs` loop that the one-walk table replaced,
+  * on the reference's own definitions: `findAll` per tag, clean length and
+  * comma count per paragraph, link density per candidate. */
 object TextStatsSpec {
+  /** `len(clean(text_content()))` (readability.py:44-45). */
+  def cleanLen(n: Node): Int = Cleaners.clean(n.textContent).length
+
+  /** `sum(text_length(a) for a in findall('.//a'))` (readability.py:381-388). */
+  def linkLen(n: Node): Int = n.findAll("a").map(cleanLen).sum
+
+  /** `get_link_density` (readability.py:381-388). */
+  def linkDensity(n: Node): Double = linkLen(n).toDouble / math.max(cleanLen(n), 1)
+
   def naiveScoreParagraphs(doc: Node): mutable.LinkedHashMap[Node, Double] = {
     val candidates = mutable.LinkedHashMap.empty[Node, Double]
     val contributing = new mutable.ArrayBuffer[Node]
     for (tag <- Seq("p", "pre", "td"); elem <- doc.findAll(tag)) {
       val parentNode = elem.parent
       val grandParent = parentNode.parent
-      val innerTextLen = Cleaners.cleanLength(elem)
+      val innerTextLen = cleanLen(elem)
       if (innerTextLen >= 25) {
         if (!candidates.contains(parentNode)) {
           candidates(parentNode) = Extractor.scoreNode(parentNode)
@@ -135,7 +158,7 @@ object TextStatsSpec {
           contributing += grandParent
         }
         var contentScore = 1.0
-        contentScore += Cleaners.countCommas(elem) + 1
+        contentScore += elem.textContent.count(_ == ',') + 1
         contentScore += math.min(innerTextLen / 100, 3)
         candidates(parentNode) = candidates(parentNode) + contentScore
         if (grandParent != null)
@@ -143,7 +166,7 @@ object TextStatsSpec {
       }
     }
     contributing.foreach { elem =>
-      candidates(elem) = candidates(elem) * (1 - Extractor.linkDensity(elem))
+      candidates(elem) = candidates(elem) * (1 - linkDensity(elem))
     }
     candidates
   }

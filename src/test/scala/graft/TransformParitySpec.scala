@@ -145,7 +145,7 @@ object TransformParitySpec {
 
   /** The tree as a string that tells every tag, attribute, text and tail
     * apart, a null string from an empty one. */
-  private def dump(top: Node): String = {
+  def dump(top: Node): String = {
     val sb = new StringBuilder
     def str(s: String): Unit =
       if (s == null) sb.append('-') else sb.append(s.length).append(':').append(s)
