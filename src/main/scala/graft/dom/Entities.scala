@@ -103,7 +103,8 @@ object Entities {
   )
 
   /** Decode character references in `s`. Only well-formed references with a
-    * terminating `;` are decoded (libxml2-recovery-ish: a bare `&` stays
+    * terminating `;` (a numeric one: `#` and ASCII digits, or `#x` and hex
+    * digits) are decoded (libxml2-recovery-ish: a bare `&` stays
     * literal). */
   def decode(s: String): String = {
     var amp = s.indexOf('&')
@@ -117,13 +118,13 @@ object Entities {
       if (semi > amp && semi - amp <= 32) {
         val body = s.substring(amp + 1, semi)
         if (body.nonEmpty && (body.charAt(0) == '#')) {
-          val num = body.substring(1)
+          val hex = body.length > 1 && (body.charAt(1) == 'x' || body.charAt(1) == 'X')
+          val num = body.substring(if (hex) 2 else 1)
+          val radix = if (hex) 16 else 10
+          // ASCII digits only: parseInt also takes a sign and other scripts' digits
           val cp: Int =
-            try {
-              if (num.nonEmpty && (num.charAt(0) == 'x' || num.charAt(0) == 'X'))
-                Integer.parseInt(num.substring(1), 16)
-              else Integer.parseInt(num)
-            } catch { case _: NumberFormatException => -1 }
+            if (num.isEmpty || !num.forall(c => c < 128 && Character.digit(c, radix) >= 0)) -1
+            else try Integer.parseInt(num, radix) catch { case _: NumberFormatException => -1 }
           if (cp >= 0 && cp <= 0x10ffff && !(cp >= 0xd800 && cp <= 0xdfff)) {
             sb.appendCodePoint(if (cp == 0) 0xfffd else cp)
             consumed = true

@@ -14,7 +14,8 @@ import scala.runtime.IntRef
   *
   * This runs inside `mapPartitions` on the extraction hot path (SURVEY.md §7
   * module 1); it is a single forward scan building the tree directly with no
-  * intermediate token list.
+  * intermediate token list. [[rebuild]] drives the same tree builder from a
+  * walk over a tree: one owner of the fix-ups a reparse would apply.
   */
 object HtmlParser {
 
@@ -61,71 +62,59 @@ object HtmlParser {
       case _ => false
     }
 
-  /** libxml2 `IS_BLANK_CH` — ASCII blanks only. */
-  private def isBlankCh(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\r'
-
-  private def isBlankRun(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) {
-      if (!isBlankCh(s.charAt(i))) return false
-      i += 1
-    }
-    true
-  }
-
-  /** The `areBlanks` rule for a blank run that directly follows `last`, the
-    * last child of the open element `parentTag` (see the parser's
-    * `dropsBlankRun`): dropped unless `last` is a `b`/`bold`/`em` element
-    * or the parent is `body`. */
-  private def dropsBlankAfter(last: Node, parentTag: String): Boolean =
-    parentTag != "body" &&
-      !(last.isElement && (last.tag == "b" || last.tag == "bold" || last.tag == "em"))
-
-  /** Whether [[parseFragment]] of `Serializer.serialize(top)` builds a tree
-    * equal to `top` (same tags, attributes and non-empty texts and tails, in
-    * the same places), for a `top` whose tag and attribute names are the
-    * parser's own. One walk checks that the parse would take none of its
-    * fix-ups:
-    *   - no element is auto-closed by its parent's tag ([[autoClosedBy]]);
-    *   - no `html`, `head` or `body` element (their tags merge into the
-    *     implied ones) and no raw-text or RCDATA element (its content
-    *     re-reads as text);
-    *   - no void element holds children or text (the serializer omits
-    *     them);
-    *   - no comment or processing instruction;
-    *   - no tail that the blank-run rule drops ([[dropsBlankAfter]]): a
-    *     tail is one text run of the serialization, read right after its
-    *     element is closed, when that element is its parent's last child.
-    * Everything else round-trips: the serializer escapes `&`, `<`, `>` in
-    * text and also `"` in attribute values, and the entity decoder undoes
-    * exactly that; an element's leading text is kept blank or not; every
-    * end tag closes the innermost open element. */
-  def reparsesUnchanged(top: Node): Boolean = {
-    val w = top.cursor
-    while (w.next()) if (w.entering) {
-      val n = w.node
-      if (!n.isElement) return false
-      val t = n.tag
-      if (t == "html" || t == "head" || t == "body" || rawText.contains(t) ||
-        rcdata.contains(t)) return false
-      if (voidElements.contains(t) &&
-        (n.firstChild != null || (n.text != null && n.text.nonEmpty))) return false
-      if (n ne top) {
-        val parentTag = n.parent.tag
-        if (autoClosedBy(t, parentTag)) return false
-        val tail = n.tail
-        if (tail != null && tail.nonEmpty && isBlankRun(tail) &&
-          dropsBlankAfter(n, parentTag)) return false
-      }
-    }
-    true
-  }
-
   /** Parse a fragment with a single root element (lxml
     * `fragment_fromstring`): returns the first element parsed under body. */
-  def parseFragment(html: String): Node = {
-    val root = parse(html)
+  def parseFragment(html: String): Node = fragmentRoot(parse(html))
+
+  /** Whether the tokenizer reads an element's content as text (raw text, RCDATA). */
+  def readsContentRaw(tag: String): Boolean = rawText.contains(tag) || rcdata.contains(tag)
+
+  /** What [[parseFragment]] returns for `Serializer.serialize(top)`, built
+    * without the string: a walk relinks `top`'s own nodes into a fresh
+    * parser's tree builder in the order its tokenizer would meet them in
+    * the serialization, so every fix-up (auto-close, blank-run drops,
+    * html/head/body merges) applies by construction. An element starts,
+    * then its text; a void element has no text, children or end tag, as the
+    * serializer writes none; then the element ends and its tail follows,
+    * except `top`'s own. Texts go in decoded: the serializer escapes only
+    * `&`, `<`, `>` (and `"` in values), which the decoder undoes exactly.
+    * `top` is consumed. It must hold no comment, processing instruction or
+    * element whose content the tokenizer [[readsContentRaw]]: there it does
+    * more than call the builder. `Cleaners2.stripAttributes` declines all
+    * of those. */
+  def rebuild(top: Node): Node = {
+    val p = new Parser("")
+    // no cursor: the walk relinks what it walks. Per open element of `top`:
+    // the node, and its next sibling and tail as they were before the relink
+    val open, nexts = new mutable.ArrayBuffer[Node]
+    val tails = new mutable.ArrayBuffer[String]
+    var n = top
+    while (n != null) {
+      if (!n.isElement || readsContentRaw(n.tag))
+        throw new IllegalArgumentException(s"rebuild needs the string for $n")
+      val first = n.firstChild
+      val text = n.text
+      val next = if (n eq top) null else n.nextSibling
+      val tail = if (n eq top) null else n.tail
+      n.unlink()
+      p.startTag(n)
+      if (voidElements.contains(n.tag)) { p.addDecoded(tail); n = next }
+      else {
+        p.addDecoded(text)
+        if (first != null) { open += n; nexts += next; tails += tail; n = first }
+        else { p.endTag(n.tag); p.addDecoded(tail); n = next }
+      }
+      while (n == null && open.nonEmpty) {
+        p.endTag(open.remove(open.length - 1).tag)
+        p.addDecoded(tails.remove(tails.length - 1))
+        n = nexts.remove(nexts.length - 1)
+      }
+    }
+    fragmentRoot(p.run()) // the empty input: opens html, head and body
+  }
+
+  /** The first element under `root`'s body. */
+  private def fragmentRoot(root: Node): Node = {
     val body = root.findFirst("body")
     val host = if (body != null) body else root
     var c = host.firstChild
@@ -300,7 +289,9 @@ object HtmlParser {
         }
       }
       pos = i
-      startTag(name, attrs)
+      val n = new Node(name)
+      if (attrs != null) n.adoptAttrs(attrs)
+      startTag(n)
       if (rawText.contains(name)) consumeRawText(name, decodeEntities = false)
       else if (rcdata.contains(name)) consumeRawText(name, decodeEntities = true)
     }
@@ -382,14 +373,20 @@ object HtmlParser {
       * between `<br><br>` and `<strong>` vanishes, text after `</h1>` stays).
       */
     private def dropsBlankRun(raw: String, atEof: Boolean): Boolean = {
-      if (!isBlankRun(raw)) return false
+      var i = 0
+      while (i < raw.length) {
+        val c = raw.charAt(i) // libxml2 `IS_BLANK_CH`: ASCII blanks only
+        if (c != ' ' && c != '\t' && c != '\n' && c != '\r') return false
+        i += 1
+      }
       if (atEof) return true
       val t = cur
       if (t.tag == "body") return false
       val last = t.lastChild
       if (last != null) {
-        if (last.tail != null) return false // lastChild is a text node
-        dropsBlankAfter(last, t.tag)
+        // KEEP after a text node (lastChild's tail) or a b/bold/em element
+        last.tail == null &&
+          !(last.isElement && (last.tag == "b" || last.tag == "bold" || last.tag == "em"))
       } else {
         // empty element (or after own leading text): KEEP — the golden
         // corpus shows lxml kept `<div>` leading blanks (washingtonpost-001
@@ -399,22 +396,26 @@ object HtmlParser {
       }
     }
 
-    private def addText(raw: String, atEof: Boolean = false): Unit = {
-      if (raw.isEmpty) return
-      if (!inBody) {
-        // whitespace-only text before body is dropped (libxml2 behavior);
-        // non-whitespace forces the body open
-        if (raw.forall(isWs)) return
-        ensureBody()
-      } else if (dropsBlankRun(raw, atEof)) return
-      val text = Entities.decode(raw)
+    /** Whether a text run is kept: before body, unless whitespace only
+      * (libxml2; other text opens the body); in body, [[dropsBlankRun]]. */
+    private def keepsText(raw: String, atEof: Boolean): Boolean =
+      if (raw.isEmpty) false
+      else if (inBody) !dropsBlankRun(raw, atEof)
+      else if (raw.forall(isWs)) false
+      else { ensureBody(); true }
+
+    private def addText(raw: String, atEof: Boolean = false): Unit =
+      if (keepsText(raw, atEof)) appendText(Entities.decode(raw))
+
+    /** [[addText]] for a run that is already decoded (or null). */
+    def addDecoded(text: String): Unit =
+      if (text != null && keepsText(text, atEof = false)) appendText(text)
+
+    private def appendText(text: String): Unit = {
       val t = cur
       val last = t.lastChild
-      if (last != null) {
-        last.tail = (if (last.tail == null) "" else last.tail) + text
-      } else {
-        t.text = (if (t.text == null) "" else t.text) + text
-      }
+      if (last != null) last.tail = if (last.tail == null) text else last.tail + text
+      else t.text = if (t.text == null) text else t.text + text
     }
 
     private def addComment(content: String): Unit = {
@@ -429,21 +430,24 @@ object HtmlParser {
         popTo(stack.length - 1)
     }
 
-    private def startTag(name: String, attrs: mutable.LinkedHashMap[String, String]): Unit = {
+    /** Inserts `n`, new or relinked by [[rebuild]]; html, head and body
+      * merge their attributes into the implied elements instead. */
+    def startTag(n: Node): Unit = {
+      val name = n.tag
       name match {
         case "html" =>
           ensureRoot()
-          if (attrs != null) attrs.foreach { case (k, v) =>
+          if (n.hasAttrs) n.attrs.foreach { case (k, v) =>
             if (root.attr(k) == null) root.setAttr(k, v)
           }
           return
         case "head" =>
-          if (!inBody) { ensureHead(); if (attrs != null)
-            attrs.foreach { case (k, v) => head.setAttr(k, v) } }
+          if (!inBody) { ensureHead(); if (n.hasAttrs)
+            n.attrs.foreach { case (k, v) => head.setAttr(k, v) } }
           return
         case "body" =>
           ensureBody()
-          if (attrs != null) attrs.foreach { case (k, v) =>
+          if (n.hasAttrs) n.attrs.foreach { case (k, v) =>
             if (body.attr(k) == null) body.setAttr(k, v)
           }
           return
@@ -452,7 +456,6 @@ object HtmlParser {
 
       if (!inBody && headOnly.contains(name)) {
         ensureHead()
-        val n = mkNode(name, attrs)
         head.append(n)
         // pushed, it is `cur` for the caller's raw-text consumption
         // (script/style/title)
@@ -464,18 +467,11 @@ object HtmlParser {
 
       runAutoClose(name)
 
-      val n = mkNode(name, attrs)
       cur.append(n)
       if (!voidElements.contains(name)) push(n)
     }
 
-    private def mkNode(name: String, attrs: mutable.LinkedHashMap[String, String]): Node = {
-      val n = new Node(name)
-      if (attrs != null) n.adoptAttrs(attrs)
-      n
-    }
-
-    private def endTag(name: String): Unit = {
+    def endTag(name: String): Unit = {
       name match {
         case "html" | "head" => return // structural; never popped explicitly
         case "body" => return

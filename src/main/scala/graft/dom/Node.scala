@@ -11,11 +11,12 @@ import scala.collection.mutable
   *
   * Layout: libxml2's. A parent holds `firstChild`/`lastChild`; each child
   * holds `parent`, `prevSibling` and `nextSibling`. The child list is private
-  * to this class: [[append]], [[insertBefore]], [[detach]] and [[dropTree]]
-  * are its only writers, and each is O(1), as is every sibling step, so a
-  * walk or an edit never scans a sibling list for a position. Every subtree
-  * walk steps a [[cursor]] over those links, so none needs a stack however
-  * deep the tree nests; [[children]] is a snapshot built per call.
+  * to this class: [[append]], [[insertBefore]], [[detach]], [[dropTree]]
+  * and [[unlink]] are its only writers, and each is O(1), as is every
+  * sibling step, so a walk or an edit never scans a sibling list for a
+  * position. Every subtree walk that leaves the links alone steps a
+  * [[cursor]] over them, so none needs a stack however deep the tree nests;
+  * [[children]] is a snapshot built per call.
   *
   * [[detach]] clears the node's own `parent` and sibling links, so a detached
   * subtree is closed: a depth-first step that climbs out of it finds no
@@ -92,6 +93,13 @@ final class Node(var tag: String) {
     child._next = ref
     if (ref._prev != null) ref._prev._next = child else _first = child
     ref._prev = child
+  }
+
+  /** Clears every link, the text and the tail, for `HtmlParser.rebuild` to
+    * relink this node; its old children keep their links to it. */
+  private[dom] def unlink(): Unit = {
+    _parent = null; _prev = null; _next = null; _first = null; _last = null
+    text = null; tail = null
   }
 
   /** Detach this node (and its tail) from its parent, if any, and clear its

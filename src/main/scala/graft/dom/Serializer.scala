@@ -8,32 +8,8 @@ package graft.dom
   */
 object Serializer {
 
-  def serialize(n: Node): String = {
+  def serialize(top: Node): String = {
     val sb = new java.lang.StringBuilder(256)
-    write(n, sb, includeTail = false)
-    sb.toString
-  }
-
-  /** Serialize only the children (inner HTML), used by P5's div-to-p test
-    * which inspects the serialized child list
-    * (/root/reference/readability/readability.py:364). */
-  def serializeChildren(n: Node): String = {
-    val sb = new java.lang.StringBuilder(128)
-    var c = n.firstChild
-    while (c != null) {
-      write(c, sb, includeTail = true)
-      c = c.nextSibling
-    }
-    sb.toString
-  }
-
-  private val rawText = Set("script", "style")
-
-  /** Tags whose text serializes RAW (unescaped) — load-bearing for
-    * Extractor.childrenMatchBlockRegex's serialize-equivalence. */
-  def isRawText(tag: String): Boolean = rawText.contains(tag)
-
-  private def write(top: Node, sb: java.lang.StringBuilder, includeTail: Boolean): Unit = {
     val w = top.cursor
     while (w.next()) {
       val n = w.node
@@ -61,10 +37,17 @@ object Serializer {
       } else {
         if (n.isElement && !HtmlParser.voidElements.contains(n.tag))
           sb.append("</").append(n.tag).append('>')
-        if ((includeTail || (n ne top)) && n.tail != null) escapeText(n.tail, sb)
+        if ((n ne top) && n.tail != null) escapeText(n.tail, sb)
       }
     }
+    sb.toString
   }
+
+  private val rawText = Set("script", "style")
+
+  /** Tags whose text serializes RAW (unescaped) — load-bearing for
+    * Extractor.childrenMatchBlockRegex's serialize-equivalence. */
+  def isRawText(tag: String): Boolean = rawText.contains(tag)
 
   private def escapeText(s: String, sb: java.lang.StringBuilder): Unit = {
     var i = 0

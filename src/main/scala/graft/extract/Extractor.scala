@@ -311,9 +311,9 @@ object Extractor {
     * for `top`), and the reference's own measures of it: `cleanLen(i)` =
     * `len(clean(text_content()))` (readability.py:44-45), `commas(i)` = the
     * `,`s in its `textContent`, and `linkLen(i)` = the sum of `cleanLen`
-    * over its `.//a` descendants (readability.py:381-388). `p`, `pre` and
-    * `td` list the descendants with those tags in document order, as
-    * `findAll` does; `img`, `li`, `input` and `embed` count them.
+    * over its `.//a` descendants (readability.py:381-388). `p`, `img`,
+    * `li`, `input` and `embed` count the descendants with those tags, as
+    * `findAll(_).size` does.
     *
     *   - Clean length: the walk feeds the text pieces, in `textContent`
     *     order, through one [[Cleaners.CleanLengthCounter]]. A node's value
@@ -334,8 +334,7 @@ object Extractor {
     var cleanLen = new Array[Int](16) // while open: units before its first non-space char
     var commas = new Array[Int](16) // while open: the running count at enter
     var linkLen = new Array[Int](16)
-    var img, li, input, embed = 0
-    private val pB, preB, tdB = new mutable.ArrayBuilder.ofInt
+    var p, img, li, input, embed = 0
 
     private val counter = new Cleaners.CleanLengthCounter
     private var nCommas = 0
@@ -356,7 +355,7 @@ object Extractor {
       }
     }
 
-    private def enter(n: Node): Int = {
+    private def enter(n: Node): Unit = {
       val i = size
       if (i == nodes.length) {
         nodes = java.util.Arrays.copyOf(nodes, 2 * i)
@@ -370,19 +369,16 @@ object Extractor {
       parent(i) = cur
       commas(i) = nCommas
       cur = i
-      i
     }
 
     private val w = top.cursor
     while (w.next()) {
       val n = w.node
       if (w.entering) {
-        val i = enter(n)
+        enter(n)
         if (n.isElement) {
           if (n ne top) n.tag match {
-            case "p" => pB += i
-            case "pre" => preB += i
-            case "td" => tdB += i
+            case "p" => p += 1
             case "img" => img += 1
             case "li" => li += 1
             case "input" => input += 1
@@ -403,10 +399,6 @@ object Extractor {
       }
     }
 
-    val p: Array[Int] = pB.result()
-    val pre: Array[Int] = preB.result()
-    val td: Array[Int] = tdB.result()
-
     def linkDensity(i: Int): Double = linkLen(i).toDouble / math.max(cleanLen(i), 1)
   }
 
@@ -423,7 +415,7 @@ object Extractor {
     // table indices; -1 is `doc.parent`, the one candidate outside the table
     val contributing = new mutable.ArrayBuffer[Int]
 
-    for (list <- Seq(stats.p, stats.pre, stats.td); i <- list) {
+    def scoreParagraph(i: Int): Unit = {
       val parentIx = stats.parent(i)
       val parentNode = stats.nodes(parentIx)
       val grandIx = stats.parent(parentIx)
@@ -451,6 +443,12 @@ object Extractor {
         if (grandParent != null)
           candidates(grandParent) = candidates(grandParent) + contentScore / 2.0
       }
+    }
+    // `findall` of p, then pre, then td; index 0 is `doc` itself. A while
+    // loop: a closure per index costs a call per node of the page
+    for (tag <- Seq("p", "pre", "td")) {
+      var i = 1
+      while (i < stats.size) { if (stats.nodes(i).tag == tag) scoreParagraph(i); i += 1 }
     }
     // link-density scaling over the `ordered` list (readability.py:428-435)
     contributing.foreach { i =>
@@ -519,19 +517,13 @@ object Extractor {
 
   /** `sanitize` (readability.py:456-584). Returns the serialized,
     * attribute-stripped article HTML: [[sanitizeTree]]'s decisions, then
-    * P11 ([[strippedHtml]]). */
+    * P11, on the tree where [[Cleaners2.stripAttributes]] applies (the
+    * serialization is then the string the regex fixpoint would return),
+    * otherwise on the string. */
   def sanitize(node: Node, candidates: mutable.LinkedHashMap[Node, Double],
       opts: ExtractOptions): String = {
     sanitizeTree(node, candidates, opts)
-    strippedHtml(node, Cleaners2.stripAttributes(node))
-  }
-
-  /** The reference's serialized article after its attribute strip
-    * (readability.py:584, cleaners.py:5-20). `onTree` says that
-    * [[Cleaners2.stripAttributes]] has already stripped `node`, so the
-    * serialization is the string the regex fixpoint would return; otherwise
-    * the fixpoint runs on the string. */
-  private def strippedHtml(node: Node, onTree: Boolean): String = {
+    val onTree = Cleaners2.stripAttributes(node)
     val html = Serializer.serialize(node)
     if (onTree) html else Cleaners2.cleanAttributesString(html)
   }
@@ -572,7 +564,7 @@ object Extractor {
           el.dropTree()
         } else if (Cleaners.countCommas(el, 10) < 10) {
           val st = new TextStats(el)
-          val pCount = st.p.length
+          val pCount = st.p
           val imgCount = st.img
           val liCount = st.li - 100
           val inputCount = st.input
@@ -645,14 +637,12 @@ object Extractor {
     * readability.py:584, 661-662). The reparse matters where the parser
     * fixes the tree up: divs retagged `<p>` whose block children then pop
     * out of the `<p>` (p auto-close, visible in the goldens), or blank
-    * tails the blank-run rule drops. It is skipped, and the article itself
-    * is the cleaned document, when both steps provably hand back what they
-    * were given: [[Cleaners2.stripAttributes]] did the strip on the tree
-    * (the serialization is then the stripped string), and
-    * `HtmlParser.reparsesUnchanged` finds none of the parser's fix-ups in
-    * it (the reparse would then build the same tree). Otherwise the string
-    * is reparsed as the reference does. ReparseParitySpec checks the two
-    * paths against each other. */
+    * tails the blank-run rule drops. Where [[Cleaners2.stripAttributes]]
+    * did the strip on the tree (the serialization is then the stripped
+    * string), `HtmlParser.rebuild` builds the reparsed tree from the
+    * article's own nodes, without the string; otherwise the string is
+    * stripped and reparsed as the reference does. ReparseParitySpec checks
+    * the two paths against each other. */
   def getArticle(doc: Node, opts: ExtractOptions): Summary = {
     try {
       var ruthless = true
@@ -667,10 +657,10 @@ object Extractor {
           val confidence = best.score
           val article = getRawArticle(candidates, best)
           sanitizeTree(article, candidates, opts)
-          val onTree = Cleaners2.stripAttributes(article)
           val cleanedDoc =
-            if (onTree && HtmlParser.reparsesUnchanged(article)) article
-            else HtmlParser.parseFragment(strippedHtml(article, onTree))
+            if (Cleaners2.stripAttributes(article)) HtmlParser.rebuild(article)
+            else HtmlParser.parseFragment(
+              Cleaners2.cleanAttributesString(Serializer.serialize(article)))
           val cleanedArticle = Serializer.serialize(cleanedDoc)
           val acceptable = cleanedArticle.length >= opts.retryLength
           if (ruthless && !acceptable) { ruthless = false }
@@ -865,7 +855,8 @@ object Cleaners2 {
     * false, leaving the tree alone, when that argument does not hold: some
     * attribute value holds a strip site ([[holdsSite]]), or `top` holds a
     * comment, a processing instruction or a script/style element, whose
-    * text the serializer writes raw.
+    * text the serializer writes raw, or a title/textarea, which
+    * `HtmlParser.rebuild` (run on every article stripped here) cannot build.
     *
     * Why: the serializer escapes `<` and `>` in text and values, and `"` in
     * values, so apart from the raw text excluded above each `<` opens a tag
@@ -882,7 +873,7 @@ object Cleaners2 {
     val w = top.cursor
     while (w.next()) if (w.entering) {
       val n = w.node
-      if (!n.isElement || Serializer.isRawText(n.tag)) return false
+      if (!n.isElement || HtmlParser.readsContentRaw(n.tag)) return false
       if (n.hasAttrs) {
         val it = n.attrs.iterator
         while (it.hasNext) {

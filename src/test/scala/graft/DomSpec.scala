@@ -81,6 +81,17 @@ class DomSpec extends AnyFunSuite {
     assert(doc.findFirst("p").text == "R&D — café")
   }
 
+  test("entities: a numeric reference is ASCII digits only, or hex digits after x") {
+    for (ok <- Seq("&#65;", "&#x41;", "&#X41;", "&#0065;", "&#x0041;", "&#x4a;"))
+      assert(Entities.decode(ok) == (if (ok.endsWith("a;")) "J" else "A"), ok)
+    // a sign, another script's digits, an empty or overlong body: literal
+    for (bad <- Seq("&#+65;", "&#x+41;", "&#-0;", "&#-65;", "&#\u0666\u0665;",
+        "&#\uff16\uff15;", "&#x\uff14\uff11;", "&#;", "&#x;", "&#xg;", "&#65a;",
+        "&#1114112;", "&#x110000;", "&#99999999999;"))
+      assert(Entities.decode(bad) == bad, bad)
+    assert(Entities.decode("&#1114111;") == new String(Character.toChars(0x10ffff)))
+  }
+
   test("attributes: quoting styles, case, duplicates") {
     val doc = HtmlParser.parse(
       "<body><div ID=\"Main\" class='a b' data-x=1 checked novalue>x</div><div id=a ID=b>y</div></body>")

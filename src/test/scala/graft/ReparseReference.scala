@@ -7,8 +7,9 @@ import graft.extract.{Cleaners2, ExtractOptions, Extractor, Summary}
   * (readability.py:584, 661-662): serialize the sanitized article, strip
   * attributes with the regex fixpoint (`Cleaners2.cleanAttributesString`)
   * and reparse the string with `HtmlParser.parseFragment`. `Extractor`
-  * skips the reparse, or strips on the tree, when that provably returns the
-  * same; ReparseParitySpec checks it against this oracle.
+  * strips on the tree where that provably returns the same string, and
+  * then builds the reparsed tree with `HtmlParser.rebuild` instead;
+  * ReparseParitySpec checks it against this oracle.
   *
   * `look`, when given, sees each pass's sanitized article tree (before any
   * strip), the stripped string and the reparsed article, after this object

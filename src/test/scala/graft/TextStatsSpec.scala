@@ -15,11 +15,12 @@ import scala.util.Random
   * `Extractor.TextStats` must equal the reference's own definitions:
   * `len(clean(text_content()))`, the `,`s in `textContent`, and the sum of
   * the clean lengths of the `.//a` descendants. Its `p` / `pre` / `td`
-  * lists must equal `findAll`, and its `img` / `li` / `input` / `embed`
-  * counts `findAll(_).size`, on one table per element, as sanitize builds
-  * them. Inputs: every html file under src/test/resources, 20 k seeded tag
-  * soups with whitespace of every class the clean length treats apart and
-  * commas injected into their text, and the hostile shapes at small sizes.
+  * nodes, in table order, must equal `findAll`, and its `p` / `img` /
+  * `li` / `input` / `embed` counts `findAll(_).size`, also on one table
+  * per element, as sanitize builds them. Inputs: every html file under
+  * src/test/resources, 20 k seeded tag soups with whitespace of every class
+  * the clean length treats apart and commas injected into their text, and
+  * the hostile shapes at small sizes.
   * Each page is checked as parsed and as `getArticle` hands it to scoring,
   * where `scoreParagraphs` must also equal the naive per-node loop it
   * replaced, score for score. */
@@ -42,15 +43,18 @@ class TextStatsSpec extends AnyFunSuite {
       i += 1
     }
     assert(t.size == i, what)
-    for ((tag, list) <- Seq("p" -> t.p, "pre" -> t.pre, "td" -> t.td))
-      assert(list.map(t.nodes(_)).toSeq == doc.findAll(tag).toSeq, s"$what: $tag list")
+    // the indices scoring walks for each tag are findAll's nodes, in order
+    for (tag <- Seq("p", "pre", "td"))
+      assert((1 until t.size).map(t.nodes(_)).filter(_.tag == tag) == doc.findAll(tag).toSeq,
+        s"$what: $tag nodes")
+    assert(t.p == doc.findAll("p").size, s"$what: p count")
   }
 
   /** A table built on `n` counts `n`'s descendants, not `n`, as `findAll`
     * finds them. */
   private def checkCounts(n: Node, what: => String): Unit = {
     val t = new Extractor.TextStats(n)
-    for ((tag, count) <- Seq("p" -> t.p.length, "img" -> t.img, "li" -> t.li,
+    for ((tag, count) <- Seq("p" -> t.p, "img" -> t.img, "li" -> t.li,
         "input" -> t.input, "embed" -> t.embed))
       assert(count == n.findAll(tag).size, s"$what: $tag count")
   }
